@@ -8,9 +8,16 @@ criterion is evidenced in the sandbox (local[8] vs local[32]).
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+MEMINFO = "/proc/meminfo"
+_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
 
 def _scratch_dir() -> str:
@@ -20,6 +27,35 @@ def _scratch_dir() -> str:
             os.makedirs(d, exist_ok=True)
             return d
     return "/tmp"
+
+
+def heap_bytes(mem: str) -> int | None:
+    """Bytes in a JVM heap size such as ``8g`` or ``2048m``; None if unparseable."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgt]?)\s*", mem.lower())
+    return int(m.group(1)) * _UNITS[m.group(2)] if m else None
+
+
+def mem_available_bytes(path: str) -> int | None:
+    """``MemAvailable`` from a meminfo file in bytes; None where it cannot be read."""
+    try:
+        with open(path) as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except (OSError, ValueError, IndexError):
+        return None
+    return None
+
+
+def _warn_if_heap_exceeds_available(mem: str) -> None:
+    want, avail = heap_bytes(mem), mem_available_bytes(MEMINFO)
+    if want is not None and avail is not None and want > avail:
+        log.warning(
+            "driver heap %s is pre-touched at JVM start (-Xms=Xmx, AlwaysPreTouch) "
+            "but only %.1f GiB is available (MemAvailable in %s); the JVM may be "
+            "killed for lack of memory: set SPARK_DRIVER_MEM to a smaller heap",
+            mem, avail / (1 << 30), MEMINFO,
+        )
 
 
 def build_session(
@@ -34,10 +70,18 @@ def build_session(
     run at two parallelism levels, changes only its task-level concurrency
     — the plan shape stays identical, which is what makes the two-level
     throughput comparison a fair scaling-efficiency measurement.
+
+    Memory: ``SPARK_DRIVER_MEM`` sets the driver heap (default ``8g``).
+    The JVM starts with ``-Xms`` equal to the heap and ``AlwaysPreTouch``,
+    so the whole heap is resident from JVM start: N engine processes on one
+    host (CLI modes, multi-writer) need about N x heap of RAM. A warning is
+    logged when the heap exceeds ``MemAvailable``. The test suite defaults
+    the variable to ``2g`` (``tests/conftest.py``).
     """
     cores = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or max(cores, 8)
     mem = os.environ.get("SPARK_DRIVER_MEM", "8g")
+    _warn_if_heap_exceeds_available(mem)
     # Xms=Xmx + AlwaysPreTouch + THP: fault the heap once at startup.
     # Measured on this sandbox: guest-kernel page-fault serialization makes
     # concurrent fresh-page allocation collapse (8 workers allocating =

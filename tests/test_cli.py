@@ -10,18 +10,20 @@ from __future__ import annotations
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from binlog_es_go_spark.lake.table import LakeTable
 
-CLI = ["python", "scripts/run_pipeline.py"]
+REPO = Path(__file__).resolve().parents[1]
+CLI = [sys.executable, "scripts/run_pipeline.py"]
 
 
 def _run(args: list[str]) -> subprocess.CompletedProcess:
     return subprocess.run(
         CLI + args + ["--cores", "4"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import types as T
@@ -20,9 +21,11 @@ from binlog_es_go_spark.lake.table import LakeTable
 
 PAYLOAD = T.StructType([T.StructField(n, T.StringType()) for n in ["repo", "path", "commit", "lang", "content"]])
 
-WRITER = """
+REPO = Path(__file__).resolve().parents[1]
+
+WRITER = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {str(REPO)!r})
 from binlog_es_go_spark.session import build_session
 from binlog_es_go_spark.cdc.apply import apply_batch
 from binlog_es_go_spark.lake.table import LakeTable

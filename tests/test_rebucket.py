@@ -118,14 +118,17 @@ def test_cli_rebucket(spark, tmp_path):
     """Operational surface: --mode rebucket as a fresh spark-submit-able
     subprocess against an existing table."""
     import subprocess
+    import sys
+    from pathlib import Path
 
     t = _make(spark, tmp_path, n_buckets=4)
     before = _state(t)
     r = subprocess.run(
-        ["python", "scripts/run_pipeline.py", "--mode", "rebucket",
+        [sys.executable, "scripts/run_pipeline.py", "--mode", "rebucket",
          "--target", t.root, "--key-cols", "id", "--new-n-buckets", "8",
          "--cores", "4"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300,
+        cwd=Path(__file__).resolve().parents[1],
     )
     assert r.returncode == 0 and "rebucketed 4 -> 8 buckets" in r.stdout, \
         r.stdout + r.stderr[-2000:]

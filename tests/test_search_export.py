@@ -79,6 +79,8 @@ def test_cli_export_mode_incremental(spark, tmp_path):
     """Operational loop: bootstrap a lake, export v0..vN to _bulk bodies,
     re-run (up to date), mutate, export the increment only."""
     import subprocess
+    import sys
+    from pathlib import Path
 
     from binlog_es_go_spark.cdc.apply import apply_batch
     from binlog_es_go_spark.cdc.events import generate_changelog
@@ -97,10 +99,11 @@ def test_cli_export_mode_incremental(spark, tmp_path):
 
     def run(args):
         return subprocess.run(
-            ["python", "scripts/run_pipeline.py", "--mode", "export",
+            [sys.executable, "scripts/run_pipeline.py", "--mode", "export",
              "--target", root, "--key-cols", "repo,path", "--out", out,
              "--index", "repo_files", "--n-shards", "4", "--cores", "4"] + args,
-            capture_output=True, text=True, timeout=300, cwd="/root/repo",
+            capture_output=True, text=True, timeout=300,
+            cwd=Path(__file__).resolve().parents[1],
         )
 
     r = run([])
