@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 
 from binlog_es_go_spark.cdc.events import flatten_changelog
 from binlog_es_go_spark.lake.merge import (
-    KEY_PRUNE_CAP,
-    BatchKeyInfo,
+    BatchKeys,
     MergeResult,
+    batch_key_info,
     dedup_last_writer,
     merge_into,
+    plan_file_cow,
 )
 from binlog_es_go_spark.lake.table import LakeTable
 
@@ -57,56 +58,6 @@ def partition_offsets(changelog: DataFrame) -> dict[str, int]:
     return {str(r["partition_id"]): int(r["mx"]) for r in rows}
 
 
-def _batch_metadata(
-    flat: DataFrame, key_cols: list[str], n_buckets: int
-) -> tuple[dict[str, int], list[int], dict[int, BatchKeyInfo]]:
-    """Per-partition max offsets, affected buckets, AND the per-bucket
-    batch key-hash sets (file-granular COW pruning input) in ONE
-    column-pruned scan — metadata jobs are a serial cost per micro-batch,
-    so they are folded together. Grouped by (partition, bucket): at most
-    n_partitions x n_buckets rows, each carrying <= KEY_PRUNE_CAP+1
-    hashes, so the driver transfer stays bounded regardless of batch
-    size; a bucket whose merged set overflows the cap degrades to its
-    [lo, hi] range (still conservative-correct for pruning)."""
-    from binlog_es_go_spark.lake.table import khash_expr
-
-    rows = (
-        flat.select("partition_id", "offset", khash_expr(key_cols).alias("_kh"))
-        .withColumn("_b", F.pmod(F.col("_kh"), F.lit(n_buckets)).cast("int"))
-        .groupBy("partition_id", "_b")
-        .agg(
-            F.max("offset").alias("mx"),
-            F.slice(F.sort_array(F.collect_set("_kh")), 1, KEY_PRUNE_CAP + 1).alias("khs"),
-            F.min("_kh").alias("lo"),
-            F.max("_kh").alias("hi"),
-        )
-        .collect()
-    )
-    offs: dict[str, int] = {}
-    acc: dict[int, list] = {}  # bucket -> [set | None, lo, hi]
-    for r in rows:
-        p = str(r["partition_id"])
-        offs[p] = max(offs.get(p, -(1 << 62)), int(r["mx"]))
-        b = int(r["_b"])
-        cur = acc.setdefault(b, [set(), int(r["lo"]), int(r["hi"])])
-        cur[1] = min(cur[1], int(r["lo"]))
-        cur[2] = max(cur[2], int(r["hi"]))
-        if cur[0] is not None:
-            if len(r["khs"]) > KEY_PRUNE_CAP:
-                cur[0] = None
-            else:
-                cur[0].update(r["khs"])
-                if len(cur[0]) > KEY_PRUNE_CAP:
-                    cur[0] = None
-    kinfo = {
-        b: BatchKeyInfo(
-            khashes=sorted(s) if s is not None else None, lo=lo, hi=hi
-        )
-        for b, (s, lo, hi) in acc.items()
-    }
-    return offs, sorted(acc), kinfo
-
-
 def apply_batch(
     table: LakeTable,
     changelog: DataFrame,
@@ -116,9 +67,7 @@ def apply_batch(
     salt_partitions: int | None = None,
     prune_buckets: bool = True,
     stream_partitions: int | None = None,
-    affected_buckets: list[int] | None = None,
-    precomputed_offsets: dict[str, int] | None = None,
-    precomputed_khashes: dict[int, BatchKeyInfo] | None = None,
+    batch_keys: BatchKeys | None = None,
     extra_properties: dict | None = None,
     write_mode: str = "auto",
     delta_max_batch_keys: int = 20_000,
@@ -153,11 +102,15 @@ def apply_batch(
     are collected as Observation metrics DURING the merge write itself —
     zero extra jobs per batch. Unknown -> a dedicated column-pruned scan.
 
-    ``affected_buckets`` + ``precomputed_offsets`` (+ optionally
-    ``precomputed_khashes``): callers that already know them
-    (``replay_changelog`` computes all three for ALL batches in one scan)
+    ``batch_keys``: the batch's metadata — per-partition max offsets and
+    per-bucket key info, a ``lake.merge.BatchKeys`` as
+    ``lake.merge.batch_key_info`` returns it. Callers that already hold it
+    (``replay_changelog`` computes it for ALL its batches in one scan)
     skip the per-batch metadata job entirely while keeping file-granular
-    COW pruning and the small-batch write shape.
+    COW pruning and the small-batch write shape. Without it, the default
+    ``prune_buckets=True`` runs that one scan here; ``prune_buckets=False``
+    is the bulk shape — every bucket rewritten unpruned, offsets observed
+    during the write as under ``stream_partitions``.
     """
     t0 = time.time()
     snap = table.snapshot()
@@ -169,15 +122,14 @@ def apply_batch(
     obs_strict = False
     offs: dict[str, int] = {}
     kinfo = None
-    if affected_buckets is not None and precomputed_offsets is not None:
-        offs, buckets = dict(precomputed_offsets), list(affected_buckets)
-        kinfo = precomputed_khashes
-    elif prune_buckets:
+    if batch_keys is None and prune_buckets:
         # incremental tail: a micro-batch touches few buckets — discover
         # them (plus per-partition offsets and the per-bucket key-hash
         # sets that drive file-granular COW) in one column-pruned scan so
         # the MERGE reads O(batch) target files, not O(table)
-        offs, buckets, kinfo = _batch_metadata(flat, snap.key_cols, snap.n_buckets)
+        batch_keys = batch_key_info(flat, snap.key_cols, snap.n_buckets)
+    if batch_keys is not None:
+        offs, kinfo = batch_keys.offsets, batch_keys.buckets
     else:
         # bulk replay/bootstrap: batches touch ~every bucket, so bucket
         # discovery is pure serial overhead — rewrite all buckets and
@@ -188,7 +140,6 @@ def apply_batch(
         # partitions plus 64 real ones); a feed outside the probe falls
         # back to one explicit offsets job (rare, still correct) — this
         # replaces the round-5 unconditional partition_offsets job.
-        buckets = list(range(snap.n_buckets))
         from pyspark.sql import Observation
 
         obs_strict = stream_partitions is not None
@@ -260,10 +211,8 @@ def apply_batch(
     if write_mode == "auto" and kinfo:
         exact = all(i.khashes is not None for i in kinfo.values())
         if exact:
-            from binlog_es_go_spark.lake.merge import estimate_overlap_bytes
-
             n_keys = sum(len(i.khashes) for i in kinfo.values())
-            overlap = estimate_overlap_bytes(snap, kinfo)
+            overlap = plan_file_cow(snap, kinfo)[2]
             # delta pays off when the rewrite would move far more bytes
             # than the batch carries (~1 KB/key is generous); bulk loads
             # and cheap surgical rewrites keep the copy-on-write path
@@ -286,11 +235,9 @@ def apply_batch(
         result = merge_into(
             table,
             flat,
-            already_deduped=mapper is not None,
-            affected_buckets=buckets,
             salt_partitions=salt_partitions,
             properties_fn=props_after_write,
-            bucket_khashes=kinfo,
+            key_info=kinfo,
         )
     result.wall_sec = time.time() - t0
     return result
@@ -317,8 +264,6 @@ def replay_changelog(
     removes K-1 serial driver jobs, the dominant amortizable slice of the
     per-commit floor (BENCH.md "Round-3 serial-floor attack").
     """
-    from binlog_es_go_spark.lake.table import khash_expr
-
     snap = table.snapshot()
     flat = flatten_changelog(changelog)
     # batch id = how many boundaries the offset has passed. ONE shallow
@@ -328,68 +273,24 @@ def replay_changelog(
     # this stays a single node with O(K) vectorized comparisons per row.
     bounds_lit = F.lit([int(b) for b in boundaries])
     batch = F.size(F.filter(bounds_lit, lambda b: F.col("offset") >= b))
-    # Same grouped shape as _batch_metadata, plus the batch dimension:
-    # per-partition offsets AND the per-bucket key-hash sets (file-granular
-    # COW pruning + small-batch write shape) for every commit in one scan.
-    rows = (
-        flat.select(
-            batch.alias("_batch"), "partition_id", "offset",
-            khash_expr(snap.key_cols).alias("_kh"),
-        )
-        .withColumn("_b", F.pmod(F.col("_kh"), F.lit(snap.n_buckets)).cast("int"))
-        .groupBy("_batch", "partition_id", "_b")
-        .agg(
-            F.max("offset").alias("mx"),
-            F.slice(F.sort_array(F.collect_set("_kh")), 1, KEY_PRUNE_CAP + 1).alias("khs"),
-            F.min("_kh").alias("lo"),
-            F.max("_kh").alias("hi"),
-        )
-        .collect()
-    )
-    per_batch_offs: dict[int, dict[str, int]] = {}
-    per_batch_acc: dict[int, dict[int, list]] = {}
-    for r in rows:
-        i = int(r["_batch"])
-        p = str(r["partition_id"])
-        offs_i = per_batch_offs.setdefault(i, {})
-        offs_i[p] = max(offs_i.get(p, -(1 << 62)), int(r["mx"]))
-        b = int(r["_b"])
-        cur = per_batch_acc.setdefault(i, {}).setdefault(b, [set(), int(r["lo"]), int(r["hi"])])
-        cur[1] = min(cur[1], int(r["lo"]))
-        cur[2] = max(cur[2], int(r["hi"]))
-        if cur[0] is not None:
-            if len(r["khs"]) > KEY_PRUNE_CAP:
-                cur[0] = None
-            else:
-                cur[0].update(r["khs"])
-                if len(cur[0]) > KEY_PRUNE_CAP:
-                    cur[0] = None
-    per_batch_kinfo: dict[int, dict[int, BatchKeyInfo]] = {
-        i: {
-            b: BatchKeyInfo(khashes=sorted(s) if s is not None else None, lo=lo, hi=hi)
-            for b, (s, lo, hi) in acc.items()
-        }
-        for i, acc in per_batch_acc.items()
-    }
+    per_batch = batch_key_info(flat, snap.key_cols, snap.n_buckets, batch=batch)
 
     results = []
     cuts = [None, *boundaries, None]
     for i in range(len(boundaries) + 1):
+        if i not in per_batch:
+            continue  # empty range: no commit, same as apply_batch on empty
         lo, hi = cuts[i], cuts[i + 1]
         part = changelog
         if lo is not None:
             part = part.filter(F.col("offset") >= int(lo))
         if hi is not None:
             part = part.filter(F.col("offset") < int(hi))
-        if i not in per_batch_offs:
-            continue  # empty range: no commit, same as apply_batch on empty
         results.append(
             apply_batch(
                 table, part, mapper=mapper, batch_id=first_batch_id + i,
                 source=source, salt_partitions=salt_partitions,
-                affected_buckets=sorted(per_batch_kinfo[i]),
-                precomputed_offsets=per_batch_offs[i],
-                precomputed_khashes=per_batch_kinfo[i],
+                batch_keys=per_batch[i],
             )
         )
     return results

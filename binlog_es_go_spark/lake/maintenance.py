@@ -15,7 +15,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from binlog_es_go_spark.lake.table import DELETED_COL, LakeTable
+from binlog_es_go_spark.lake.table import DELETED_COL, KHASH_COL, LakeTable, retry_on_conflict
 
 
 def small_file_buckets(table: LakeTable, max_files_per_bucket: int = 16) -> list[int]:
@@ -115,7 +115,7 @@ def compact(
     # stay listed). Partial compactions leave deltas: unfolded buckets
     # still need their rows, and folded rows tie away harmlessly.
     if buckets is None and (snap.deltas or []):
-        new_snap = _drop_deltas_retrying(table, snap.deltas)
+        new_snap = retry_on_conflict(lambda: table.drop_deltas(snap.deltas))
     return new_snap.version
 
 
@@ -165,7 +165,7 @@ def rebucket(
         new_n_buckets=new_n_buckets,
     )
     if snap.deltas:
-        new_snap = _drop_deltas_retrying(table, snap.deltas)
+        new_snap = retry_on_conflict(lambda: table.drop_deltas(snap.deltas))
     return new_snap.version
 
 
@@ -184,8 +184,12 @@ def compact_deltas(table: LakeTable, salt_partitions: int | None = None) -> int 
     ties — until the next compaction reclaims them. Returns the new
     version, or None when no deltas were pending.
     """
-    from binlog_es_go_spark.lake.merge import ENGINE_COLS, merge_into
-    from binlog_es_go_spark.lake.table import KHASH_COL
+    from binlog_es_go_spark.lake.merge import (
+        ENGINE_COLS,
+        batch_key_info,
+        merge_into,
+        scoped_merge_conf,
+    )
 
     snap = table.snapshot()
     rels = list(snap.deltas or [])
@@ -204,23 +208,11 @@ def compact_deltas(table: LakeTable, salt_partitions: int | None = None) -> int 
         "ELSE coalesce(last_op, 'update') END AS op",
         "updated_at AS ts",
     )
-    merge_into(table, src, salt_partitions=salt_partitions)
-    return _drop_deltas_retrying(table, rels).version
-
-
-def _drop_deltas_retrying(table: LakeTable, rels: list[str], retries: int = 5):
-    import time as _time
-
-    from binlog_es_go_spark.lake.table import CommitConflict
-
-    for attempt in range(retries):
-        try:
-            return table.drop_deltas(rels)
-        except CommitConflict:
-            if attempt == retries - 1:
-                raise
-            _time.sleep(0.2 * (2**attempt))
-    raise AssertionError("unreachable")
+    # the fold's key scan is planned like the merge it feeds (AQE off)
+    with scoped_merge_conf(table.spark):
+        kinfo = batch_key_info(src, snap.key_cols, snap.n_buckets).buckets
+    merge_into(table, src, salt_partitions=salt_partitions, key_info=kinfo)
+    return retry_on_conflict(lambda: table.drop_deltas(rels)).version
 
 
 def expire_snapshots(table: LakeTable, keep_last: int = 2, min_age_sec: float = 600.0) -> list[str]:

@@ -25,10 +25,12 @@ with two strengthenings over the reference:
 
 Physical plan, deliberately:
 
-    1. distinct buckets of source keys          (tiny driver collect,
-                                                 bounded by n_buckets)
-    2. target read pruned to those buckets      (file skipping — O(batch),
-                                                 not O(table))
+    1. affected buckets and their key hashes come from the caller: a
+       BatchKeyInfo per bucket, built by batch_key_info in the same
+       grouped scan that yields the batch's offsets (None = every
+       bucket, unpruned); the merge runs no Spark job before its write
+    2. target read pruned to those buckets' files that may hold a batch
+       key (plan_file_cow: file skipping — O(batch), not O(table))
     3. union(target-subset, source) → window by key ordered by (offset
        desc, seq desc, is_target desc) → rank 1 — within-batch LWW
        dedup, the cross-batch guard, and the target tie-break in ONE
@@ -56,12 +58,10 @@ tuning knob, same math).
 from __future__ import annotations
 
 import bisect
-import os
-import time
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,12 +69,12 @@ from binlog_es_go_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
     KHASH_COL,
-    CommitConflict,
     LakeTable,
     align_to_schema,
     bucket_expr,
     khash_expr,
     merge_schemas,
+    retry_on_conflict,
 )
 
 OFFSET_COL = "offset"
@@ -99,24 +99,27 @@ WRITE_TARGET_BYTES = 64 << 20
 # granularity a later compaction discards anyway.
 SMALL_COMMIT_BYTES = 8 << 20
 
-# Merge commits are planned with AQE disabled by default (round-6 floor
-# attack, measured ~0.1-0.2 s/commit at sf0.1): the merge already sizes
-# both of its exchanges itself (shuffle_partitions for the guard window,
-# the adaptive (bucket, group) width for the write), AQE's skew-join
-# splitting never applies (no joins in the merge plan), so all AQE buys
-# here is per-stage materialization barriers + driver re-planning — pure
-# serial floor per micro-batch at ANY table size. Parameterized so a
-# deployment whose merge batches are huge and mis-partitioned can turn
-# coalescing back on ("on" keeps the session setting untouched).
-MERGE_AQE = os.environ.get("BINLOG_SPARK_MERGE_AQE", "off")
-
 
 @contextmanager
 def scoped_merge_conf(spark):
-    """Plan the enclosed merge actions with AQE off (see MERGE_AQE)."""
-    if MERGE_AQE != "off":
-        yield
-        return
+    """Plan the enclosed merge actions with AQE off.
+
+    Round-6 floor attack, measured ~0.1-0.2 s/commit at sf0.1: the merge
+    already sizes both of its exchanges itself (shuffle_partitions for the
+    guard window, the adaptive (bucket, group) width for the write), AQE's
+    skew-join splitting never applies (no joins in the merge plan), so all
+    AQE buys here is per-stage materialization barriers + driver
+    re-planning — pure serial floor per micro-batch at ANY table size.
+
+    Single writer per session: the flag is session-global, set on entry
+    and restored on exit, not scoped to this thread. While a merge runs,
+    queries planned on other threads of the same SparkSession also plan
+    with AQE off, and two overlapping merges on one session can restore
+    the flag under each other, so the later one may plan partly with AQE
+    on. Results stay correct either way (AQE changes plans, never
+    answers); the measured floor holds only with one writer per session.
+    Concurrent writers belong in separate sessions or processes.
+    """
     key = "spark.sql.adaptive.enabled"
     prev = spark.conf.get(key)
     if prev == "false":
@@ -147,6 +150,113 @@ class BatchKeyInfo:
             i = bisect.bisect_left(self.khashes, file_min)
             return i < len(self.khashes) and self.khashes[i] <= file_max
         return not (self.hi < file_min or self.lo > file_max)
+
+
+@dataclass
+class BatchKeys:
+    """What one batch touches (see batch_key_info): the max offset per
+    stream partition, and the BatchKeyInfo of every bucket it hits."""
+
+    offsets: dict[str, int]
+    buckets: dict[int, BatchKeyInfo]
+
+
+def batch_key_info(
+    flat: DataFrame, key_cols: list[str], n_buckets: int, batch: Column | None = None
+):
+    """The metadata every commit path needs before its MERGE, in ONE
+    column-pruned grouped collect: per stream partition the max offset,
+    and per bucket the batch's key hashes (file-granular COW pruning and
+    the small-batch write shape). Metadata jobs are a serial cost per
+    commit, so they are folded together: ``apply_batch`` runs this per
+    micro-batch, ``replay_changelog`` once for all its commits (``batch``:
+    a column giving each row's commit index), ``compact_deltas`` for the
+    fold's source.
+
+    Grouped by (partition, bucket) — by partition only when the source has
+    ``partition_id`` (the fold's does not; its offsets come back empty):
+    at most n_partitions x n_buckets rows, each carrying <=
+    KEY_PRUNE_CAP+1 hashes, so the driver transfer stays bounded
+    regardless of batch size; a bucket whose merged set overflows the cap
+    degrades to its [lo, hi] range (still conservative-correct for
+    pruning).
+
+    Returns a BatchKeys; with ``batch``, a dict commit index -> BatchKeys
+    holding only the indexes that have rows."""
+    has_pid = "partition_id" in flat.columns
+    lead = ([batch.alias("_batch")] if batch is not None else []) + (
+        ["partition_id"] if has_pid else []
+    )
+    rows = (
+        flat.select(*lead, *(["offset"] if has_pid else []), khash_expr(key_cols).alias("_kh"))
+        .withColumn("_b", F.pmod(F.col("_kh"), F.lit(n_buckets)).cast("int"))
+        .groupBy(*lead, "_b")
+        .agg(
+            *([F.max("offset").alias("mx")] if has_pid else []),
+            F.slice(F.sort_array(F.collect_set("_kh")), 1, KEY_PRUNE_CAP + 1).alias("khs"),
+            F.min("_kh").alias("lo"),
+            F.max("_kh").alias("hi"),
+        )
+        .collect()
+    )
+    offs: dict[int | None, dict[str, int]] = {}
+    acc: dict[tuple[int | None, int], list] = {}  # (batch, bucket) -> [set | None, lo, hi]
+    for r in rows:
+        i = int(r["_batch"]) if batch is not None else None
+        offs_i = offs.setdefault(i, {})
+        if has_pid:
+            p = str(r["partition_id"])
+            offs_i[p] = max(offs_i.get(p, -(1 << 62)), int(r["mx"]))
+        cur = acc.setdefault((i, int(r["_b"])), [set(), int(r["lo"]), int(r["hi"])])
+        cur[1] = min(cur[1], int(r["lo"]))
+        cur[2] = max(cur[2], int(r["hi"]))
+        if cur[0] is not None:
+            cur[0].update(r["khs"])
+            if len(cur[0]) > KEY_PRUNE_CAP:
+                cur[0] = None
+    out = {i: BatchKeys(offsets=o, buckets={}) for i, o in offs.items()}
+    for (i, b), (s, lo, hi) in sorted(acc.items(), key=lambda kv: kv[0][1]):
+        out[i].buckets[b] = BatchKeyInfo(khashes=sorted(s) if s is not None else None, lo=lo, hi=hi)
+    if batch is not None:
+        return out
+    return out.get(None, BatchKeys(offsets={}, buckets={}))
+
+
+def plan_file_cow(
+    snap, kinfo: dict[int, BatchKeyInfo] | None
+) -> tuple[list[str], dict[int, list[str]], int]:
+    """File-granular copy-on-write plan (manifest-only driver math, no
+    Spark job): within each touched bucket, REWRITE only files whose
+    stored _khash range (manifest file_stats, tight because writes are
+    khash-sorted) can contain a batch key; CARRY the rest forward
+    untouched. Files without stats — pre-khash data, failed harvest —
+    conservatively rewrite. ``kinfo=None`` rewrites every file of every
+    bucket (the bulk shape). At 100 TB this turns "one hot key costs a
+    full-bucket rewrite" into "one hot key costs one file" (the lake analog
+    of the reference's row-level upsert, pkg/es/writer.go:156-193).
+
+    Returns (files to rewrite, bucket -> files to carry, bytes to
+    rewrite); files of unknown size count one full WRITE_TARGET_BYTES.
+    The byte total sizes the merge's write and drives the auto
+    rewrite-vs-delta choice in cdc/apply.py."""
+    fstats = snap.file_stats or {}
+    sizes = snap.file_sizes or {}
+    rewrite: list[str] = []
+    carry: dict[int, list[str]] = {}
+    overlap_bytes = 0
+    for b in range(snap.n_buckets) if kinfo is None else sorted(kinfo):
+        info = None if kinfo is None else kinfo[b]
+        for rel in snap.buckets.get(b, []):
+            st = fstats.get(rel, {}).get(KHASH_COL)
+            hit = True
+            if info is not None and st and st[0] is not None and st[1] is not None and not st[2]:
+                hit = info.may_hit(int(st[0]), int(st[1]))
+            if hit:
+                rewrite.append(rel)
+                overlap_bytes += sizes.get(rel, WRITE_TARGET_BYTES)
+            else:
+                carry.setdefault(b, []).append(rel)
+    return rewrite, carry, overlap_bytes
 
 
 @dataclass
@@ -192,17 +302,9 @@ def dedup_last_writer(
 def merge_into(
     table: LakeTable,
     source: DataFrame,
-    offset_col: str = OFFSET_COL,
-    op_col: str = OP_COL,
-    seq_col: str | None = SEQ_COL,
-    ts_col: str | None = TS_COL,
-    properties_update: dict | None = None,
     salt_partitions: int | None = None,
-    max_commit_retries: int = 5,
-    already_deduped: bool = False,
-    affected_buckets: list[int] | None = None,
     properties_fn=None,
-    bucket_khashes: dict[int, BatchKeyInfo] | None = None,
+    key_info: dict[int, BatchKeyInfo] | None = None,
 ) -> MergeResult:
     """Apply a changelog micro-batch to ``table`` (see module docstring).
 
@@ -210,54 +312,54 @@ def merge_into(
     ``offset`` (long, monotonic per stream partition), ``op`` in
     {insert, update, delete}; optional ``seq_in_tx``, ``ts``.
 
+    ``key_info``: the batch's per-bucket key info
+    (``batch_key_info(...).buckets``). Only those buckets are merged, and
+    within them only the files that may hold a batch key are rewritten;
+    ``{}`` commits nothing. ``None`` is the bulk shape: every bucket,
+    every file, no pruning.
+
     ``salt_partitions``: number of write tasks; files per commit are
     bounded by max(n_buckets, salt_partitions). Hot buckets (Zipf-skewed
     repos all hashing into few buckets) split across write tasks once
     salt_partitions exceeds n_buckets — see the module docstring's
     write-skew note.
     """
-    for attempt in range(max_commit_retries):
-        try:
-            with scoped_merge_conf(table.spark):
-                return _merge_once(
-                    table, source, offset_col, op_col, seq_col, ts_col,
-                    properties_update, salt_partitions, already_deduped, affected_buckets,
-                    properties_fn, bucket_khashes,
-                )
-        except CommitConflict:
-            # Optimistic-concurrency retry: re-read the new snapshot and
-            # recompute — the analog of Iceberg commit.retry and of the
-            # reference's conflict recompute
-            # (pkg/pipeline/sink/bulkwriter.go:188-266).
-            if attempt == max_commit_retries - 1:
-                raise
-            time.sleep(0.2 * (2**attempt))  # reference backoff ladder, retry.go:13-15
-    raise AssertionError("unreachable")
+
+    def commit() -> MergeResult:
+        with scoped_merge_conf(table.spark):
+            return _merge_once(table, source, salt_partitions, properties_fn, key_info)
+
+    return retry_on_conflict(commit)
+
+
+def _evolved_schema(snap, source: DataFrame) -> tuple[list[str], T.StructType]:
+    """The source's payload columns, and the table schema widened by any
+    new ones (schema evolution)."""
+    payload_cols = [
+        c for c in source.columns
+        if c not in snap.key_cols
+        and c not in (OFFSET_COL, OP_COL, SEQ_COL, TS_COL, BUCKET_COL)
+        and c not in ENGINE_COLS
+    ]
+    incoming = T.StructType(
+        [f for f in source.schema.fields if f.name in snap.key_cols]
+        + [f for f in source.schema.fields if f.name in payload_cols]
+    )
+    return payload_cols, merge_schemas(snap.schema, incoming)
 
 
 def _merge_once(
     table: LakeTable,
     source: DataFrame,
-    offset_col: str,
-    op_col: str,
-    seq_col: str | None,
-    ts_col: str | None,
-    properties_update: dict | None,
     salt_partitions: int | None,
-    already_deduped: bool,
-    affected_buckets: list[int] | None = None,
-    properties_fn=None,
-    bucket_khashes: dict[int, BatchKeyInfo] | None = None,
+    properties_fn,
+    key_info: dict[int, BatchKeyInfo] | None,
 ) -> MergeResult:
     snap = table.snapshot()
     key_cols = snap.key_cols
-
-    payload_cols = [
-        c for c in source.columns
-        if c not in key_cols
-        and c not in (offset_col, op_col, seq_col, ts_col, BUCKET_COL)
-        and c not in ENGINE_COLS
-    ]
+    affected = list(range(snap.n_buckets)) if key_info is None else sorted(key_info)
+    if not affected:
+        return MergeResult(version=snap.version, affected_buckets=[])
 
     # Within-batch dedup is FUSED into the merge window below (one wide
     # shuffle total): the window's (offset desc, seq desc, is_target desc)
@@ -265,76 +367,11 @@ def _merge_once(
     # single rank. A separate dedup pass would shuffle the full content
     # twice for nothing.
     src = source.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets))
-
-    # Affected-bucket discovery: at most n_buckets ints — a safe collect.
-    # Callers that already know the set (the apply core computes it in the
-    # same scan as partition offsets) pass it in — with per-bucket key-hash
-    # info when they have it — to save a job. The self-computed job gathers
-    # both in ONE pass: the distinct buckets AND, per bucket, the batch's
-    # distinct key hashes (capped at KEY_PRUNE_CAP; overflow degrades to a
-    # [lo, hi] range), which drive file-granular COW below.
-    kinfo: dict[int, BatchKeyInfo] = bucket_khashes or {}
-    if affected_buckets is not None:
-        affected = list(affected_buckets)
-    else:
-        rows = (
-            src.select(BUCKET_COL, khash_expr(key_cols).alias(KHASH_COL))
-            .groupBy(BUCKET_COL)
-            .agg(
-                F.slice(F.sort_array(F.collect_set(KHASH_COL)), 1, KEY_PRUNE_CAP + 1).alias("khs"),
-                F.min(KHASH_COL).alias("lo"),
-                F.max(KHASH_COL).alias("hi"),
-            )
-            .collect()
-        )
-        affected = [int(r[BUCKET_COL]) for r in rows]
-        kinfo = {
-            int(r[BUCKET_COL]): BatchKeyInfo(
-                khashes=list(r["khs"]) if len(r["khs"]) <= KEY_PRUNE_CAP else None,
-                lo=int(r["lo"]),
-                hi=int(r["hi"]),
-            )
-            for r in rows
-        }
-    if not affected:
-        return MergeResult(version=snap.version, affected_buckets=[])
-
-    # File-granular copy-on-write: within each affected bucket, REWRITE
-    # only files whose stored _khash range (manifest file_stats, tight
-    # because writes are khash-sorted) can contain a batch key; CARRY the
-    # rest forward untouched. Files without stats — pre-khash data, failed
-    # harvest — conservatively rewrite. At 100 TB this turns "one hot key
-    # costs a full-bucket rewrite" into "one hot key costs one file" (the
-    # lake analog of the reference's row-level upsert,
-    # pkg/es/writer.go:156-193).
-    fstats = snap.file_stats or {}
-    overlap_files: list[str] = []
-    carry_map: dict[int, list[str]] = {}
-    rewritten = carried = 0
-    for b in affected:
-        info = kinfo.get(b)
-        for rel in snap.buckets.get(b, []):
-            st = fstats.get(rel, {}).get(KHASH_COL)
-            hit = True
-            if info is not None and st and st[0] is not None and st[1] is not None and not st[2]:
-                hit = info.may_hit(int(st[0]), int(st[1]))
-            if hit:
-                overlap_files.append(rel)
-                rewritten += 1
-            else:
-                carry_map.setdefault(b, []).append(rel)
-                carried += 1
-
-    # Schema evolution: new payload columns widen the table schema.
-    incoming = T.StructType(
-        [f for f in src.schema.fields if f.name in key_cols]
-        + [f for f in src.schema.fields if f.name in payload_cols]
-    )
-    new_schema = merge_schemas(snap.schema, incoming)
+    overlap_files, carry_map, overlap_bytes = plan_file_cow(snap, key_info)
+    payload_cols, new_schema = _evolved_schema(snap, source)
 
     src_norm = _normalize_source(
-        src, key_cols, payload_cols, offset_col, op_col, seq_col, ts_col,
-        extra_exprs=[f"`{BUCKET_COL}`", "0 AS _is_target"],
+        src, key_cols, payload_cols, extra_exprs=[f"`{BUCKET_COL}`", "0 AS _is_target"]
     )
 
     # Tombstones included: they hold the offset guard for their key.
@@ -385,13 +422,9 @@ def _merge_once(
     # file_sizes; files with unknown size count one full target each).
     # Bulk paths (no/overflowed key info) keep the full width.
     n_tasks = max(1, n_out)
-    narrow = bool(kinfo) and bool(affected) and all(
-        kinfo.get(b) is not None and kinfo[b].khashes is not None for b in affected
-    )
+    narrow = key_info is not None and all(i.khashes is not None for i in key_info.values())
     if narrow:
-        sizes = snap.file_sizes or {}
-        overlap_bytes = sum(sizes.get(rel, WRITE_TARGET_BYTES) for rel in overlap_files)
-        n_keys = sum(len(kinfo[b].khashes) for b in affected)
+        n_keys = sum(len(i.khashes) for i in key_info.values())
         est_bytes = overlap_bytes + n_keys * 1024  # generous per-row estimate
         # SURGICAL commits (rewriting under SMALL_COMMIT_BYTES) collapse
         # to ONE write group per bucket: at k_groups range groups such a
@@ -405,11 +438,6 @@ def _merge_once(
             k_groups = 1
             span = 1 << 32
         n_tasks = min(n_out, max(k_groups, -(-est_bytes // WRITE_TARGET_BYTES)))
-    # A/B knob (bench_extra experiments): force the single-exchange shape
-    # for bulk batches too (at full width) — full batch rows cross the one
-    # exchange instead of partial-top-1-reduced rows plus a winners-only
-    # exchange.
-    small = narrow or os.environ.get("BINLOG_SPARK_BULK_ONE_EXCHANGE") == "1"
 
     # ONE window resolves everything: max (offset, seq) per key wins —
     # ``last_seq`` is PERSISTED so a transaction split across micro-batches
@@ -435,14 +463,15 @@ def _merge_once(
     # max_by(struct(row)) aggregation was measured 3x slower — sort-agg
     # fallback; writing the key-hash-distributed window output directly
     # explodes into n_tasks*n_buckets files, also 3x slower — BENCH.md
-    # round-3 table.)
+    # round-3 table. Forcing the one-exchange shape on bulk batches too
+    # measured neutral in three A/B pairs, OPTIMIZATION_r06.md.)
     wg = F.floor(F.col(KHASH_COL) / F.lit(span)).cast("int")
     order = [
         F.col("last_offset").desc_nulls_last(),
         F.coalesce(F.col("last_seq"), F.lit(0)).desc(),
         F.col("_is_target").desc(),
     ]
-    if small:
+    if narrow:
         combined = combined.withColumn(KHASH_COL, khash_expr(key_cols)).withColumn("_wg", wg)
         combined = combined.repartition(n_tasks, F.col(BUCKET_COL), F.col("_wg"))
         w = Window.partitionBy(BUCKET_COL, "_wg", *key_cols).orderBy(*order)
@@ -465,7 +494,6 @@ def _merge_once(
         winners,
         replaced_buckets=affected,
         new_schema=new_schema,
-        properties_update=properties_update,
         expected_version=snap.version,
         properties_fn=properties_fn,
         carry_files=carry_map,
@@ -473,39 +501,16 @@ def _merge_once(
     )
     return MergeResult(
         version=new_snap.version,
-        affected_buckets=sorted(affected),
-        rewritten_files=rewritten,
-        carried_files=carried,
+        affected_buckets=affected,
+        rewritten_files=len(overlap_files),
+        carried_files=sum(len(fl) for fl in carry_map.values()),
     )
-
-
-def estimate_overlap_bytes(snap, kinfo: dict[int, BatchKeyInfo]) -> int:
-    """Bytes of base files a batch would rewrite (manifest-only, driver
-    math — the same conservative may_hit pruning _merge_once applies).
-    Drives the auto rewrite-vs-delta choice in cdc/apply.py: delta pays
-    off exactly when this dwarfs the batch itself."""
-    fstats = snap.file_stats or {}
-    sizes = snap.file_sizes or {}
-    total = 0
-    for b, info in kinfo.items():
-        for rel in snap.buckets.get(b, []):
-            st = fstats.get(rel, {}).get(KHASH_COL)
-            hit = True
-            if st and st[0] is not None and st[1] is not None and not st[2]:
-                hit = info.may_hit(int(st[0]), int(st[1]))
-            if hit:
-                total += sizes.get(rel, WRITE_TARGET_BYTES)
-    return total
 
 
 def _normalize_source(
     src: DataFrame,
     key_cols: list[str],
     payload_cols: list[str],
-    offset_col: str,
-    op_col: str,
-    seq_col: str | None,
-    ts_col: str | None,
     extra_exprs: list[str] | None = None,
 ) -> DataFrame:
     """Changelog events → engine row shape (payload + last_offset/last_seq/
@@ -514,14 +519,11 @@ def _normalize_source(
     runs per micro-batch — see align_to_schema for the measured per-commit
     driver floor). Delete events carry no after-image: their payload is
     nulled so a delete winner becomes a pure tombstone."""
-    has_seq = bool(seq_col) and seq_col in src.columns
-    is_delete_sql = f"`{op_col}` = 'delete'"
+    is_delete_sql = f"`{OP_COL}` = 'delete'"
     ts_sql = (
-        f"CAST(`{ts_col}` AS timestamp)"
-        if ts_col and ts_col in src.columns
-        else "CAST(NULL AS timestamp)"
+        f"CAST(`{TS_COL}` AS timestamp)" if TS_COL in src.columns else "CAST(NULL AS timestamp)"
     )
-    seq_sql = f"CAST(`{seq_col}` AS bigint)" if has_seq else "CAST(0 AS bigint)"
+    seq_sql = f"CAST(`{SEQ_COL}` AS bigint)" if SEQ_COL in src.columns else "CAST(0 AS bigint)"
     return src.selectExpr(
         *[f"`{k}`" for k in key_cols],
         *[
@@ -530,26 +532,16 @@ def _normalize_source(
             f"ELSE `{c}` END AS `{c}`"
             for c in payload_cols
         ],
-        f"CAST(`{offset_col}` AS bigint) AS last_offset",
+        f"CAST(`{OFFSET_COL}` AS bigint) AS last_offset",
         f"{seq_sql} AS last_seq",
-        f"`{op_col}` AS last_op",
+        f"`{OP_COL}` AS last_op",
         f"({is_delete_sql}) AS `{DELETED_COL}`",
         f"{ts_sql} AS updated_at",
         *(extra_exprs or []),
     )
 
 
-def merge_into_delta(
-    table: LakeTable,
-    source: DataFrame,
-    offset_col: str = OFFSET_COL,
-    op_col: str = OP_COL,
-    seq_col: str | None = SEQ_COL,
-    ts_col: str | None = TS_COL,
-    properties_update: dict | None = None,
-    max_commit_retries: int = 5,
-    properties_fn=None,
-) -> MergeResult:
+def merge_into_delta(table: LakeTable, source: DataFrame, properties_fn=None) -> MergeResult:
     """Merge-on-read apply: the O(batch) tail write path.
 
     Where ``merge_into`` rewrites every base file a batch key might live
@@ -569,48 +561,28 @@ def merge_into_delta(
     auto-folds past a debt threshold (cdc/apply.py).
     """
     snap = table.snapshot()
-    key_cols = snap.key_cols
-    payload_cols = [
-        c for c in source.columns
-        if c not in key_cols
-        and c not in (offset_col, op_col, seq_col, ts_col, BUCKET_COL)
-        and c not in ENGINE_COLS
-    ]
-    incoming = T.StructType(
-        [f for f in source.schema.fields if f.name in key_cols]
-        + [f for f in source.schema.fields if f.name in payload_cols]
-    )
-    new_schema = merge_schemas(snap.schema, incoming)
-    winners = _normalize_source(
-        source, key_cols, payload_cols, offset_col, op_col, seq_col, ts_col
-    )
+    payload_cols, new_schema = _evolved_schema(snap, source)
     # NO within-batch dedup: the reader's resolution window picks the
     # max-(offset, seq) row per key anyway, so a dedup here would spend a
     # whole shuffle (~0.4 s of a ~1 s append, measured: 64 scheduled
     # window tasks for 200 rows) to shave a few duplicate rows off a
     # kilobyte-scale file. Delta files carry all batch rows; dedup debt
     # is settled at read/fold time like the rest of the guard.
-    for attempt in range(max_commit_retries):
-        try:
-            with scoped_merge_conf(table.spark):
-                new_snap = table.append_delta(
-                    winners,
-                    properties_update=properties_update,
-                    expected_version=None,
-                    properties_fn=properties_fn,
-                    new_schema=new_schema,
-                )
-            return MergeResult(
-                version=new_snap.version,
-                affected_buckets=[],
-                rewritten_files=0,
-                carried_files=sum(len(fl) for fl in snap.buckets.values()),
+    winners = _normalize_source(source, snap.key_cols, payload_cols)
+
+    def commit() -> MergeResult:
+        with scoped_merge_conf(table.spark):
+            new_snap = table.append_delta(
+                winners, properties_fn=properties_fn, new_schema=new_schema
             )
-        except CommitConflict:
-            if attempt == max_commit_retries - 1:
-                raise
-            time.sleep(0.2 * (2**attempt))
-    raise AssertionError("unreachable")
+        return MergeResult(
+            version=new_snap.version,
+            affected_buckets=[],
+            rewritten_files=0,
+            carried_files=sum(len(fl) for fl in snap.buckets.values()),
+        )
+
+    return retry_on_conflict(commit)
 
 
 def align_union(a: DataFrame, b: DataFrame, schema: T.StructType) -> DataFrame:

@@ -62,6 +62,25 @@ class CommitConflict(Exception):
     """Another writer committed first; caller should re-read and retry."""
 
 
+COMMIT_ATTEMPTS = 5
+
+
+def retry_on_conflict(commit):
+    """Run ``commit()`` until no other writer beats it: the optimistic-
+    concurrency retry every writer of this table shares — the analog of
+    Iceberg commit.retry and of the reference's conflict recompute
+    (pkg/pipeline/sink/bulkwriter.go:188-266). ``commit`` must re-read the
+    snapshot it builds on. COMMIT_ATTEMPTS attempts on the reference
+    backoff ladder, 0.2 * 2^n s (retry.go:13-15); the last conflict
+    propagates."""
+    for attempt in range(COMMIT_ATTEMPTS - 1):
+        try:
+            return commit()
+        except CommitConflict:
+            time.sleep(0.2 * (2**attempt))
+    return commit()
+
+
 def khash_expr(key_cols: list[str]):
     """crc32 of the unit-separated key columns — the stored ``_khash``.
 

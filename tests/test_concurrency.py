@@ -90,3 +90,35 @@ def test_stale_handle_commit_conflict_raises(spark, tmp_path):
     df = t.with_bucket(t.read(include_deleted=True))
     with pytest.raises(CommitConflict):
         t.write_buckets(df, replaced_buckets=[0], expected_version=0)
+
+
+def test_retry_on_conflict_ladder(monkeypatch):
+    """The one retry every writer shares: 5 attempts on the 0.2 * 2^n s
+    backoff ladder, then the last CommitConflict propagates; a commit
+    that wins on a later attempt returns its result."""
+    import binlog_es_go_spark.lake.table as tb
+
+    slept: list[float] = []
+    monkeypatch.setattr(tb.time, "sleep", slept.append)
+    calls = []
+
+    def always_loses():
+        calls.append(1)
+        raise CommitConflict("lost")
+
+    with pytest.raises(CommitConflict):
+        tb.retry_on_conflict(always_loses)
+    assert len(calls) == 5
+    assert slept == [0.2, 0.4, 0.8, 1.6]
+
+    slept.clear()
+    outcomes = iter([CommitConflict("lost"), CommitConflict("lost"), "v7"])
+
+    def wins_third():
+        o = next(outcomes)
+        if isinstance(o, Exception):
+            raise o
+        return o
+
+    assert tb.retry_on_conflict(wins_third) == "v7"
+    assert slept == [0.2, 0.4]

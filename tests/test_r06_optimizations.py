@@ -8,6 +8,9 @@ pinned against an independent reference:
   definition;
 * ``replay_changelog``'s precomputed key-hash metadata vs per-batch
   ``apply_batch`` (state identical, file-COW pruning still engaged);
+* ``batch_key_info``, the one metadata scan every commit path runs: the
+  key-hash cap across stream partitions, batch-grouped vs per-range, and
+  sources without ``partition_id``;
 * the small-batch single-exchange merge plan shape (one Exchange) and
   its LWW correctness.
 """
@@ -130,6 +133,68 @@ def test_replay_changelog_equals_per_batch_apply(spark, tmp_path):
     rewritten = sum(r.rewritten_files or 0 for r in results)
     assert rewritten > 0
     assert carried >= 0  # pruning engaged without error (counts recorded)
+
+
+def _khashes(spark, keys):
+    from binlog_es_go_spark.lake.table import khash_expr
+
+    df = spark.createDataFrame([(k,) for k in keys], "k long")
+    return sorted(r[0] for r in df.select(khash_expr(["k"])).collect())
+
+
+def test_batch_key_info_cap_spans_stream_partitions(spark, monkeypatch):
+    """A bucket whose keys split across two stream partitions, each under
+    KEY_PRUNE_CAP but together over it, degrades to the [lo, hi] range."""
+    import binlog_es_go_spark.lake.merge as mg
+
+    monkeypatch.setattr(mg, "KEY_PRUNE_CAP", 3)
+    rows = [(0, 10, 1), (0, 11, 2), (0, 12, 3), (1, 20, 4), (1, 21, 5)]
+    df = spark.createDataFrame(rows, "partition_id int, offset long, k long")
+
+    split = mg.batch_key_info(df, ["k"], 1)
+    hs = _khashes(spark, [1, 2, 3, 4, 5])
+    assert split.offsets == {"0": 12, "1": 21}
+    assert list(split.buckets) == [0]
+    assert split.buckets[0].khashes is None
+    assert (split.buckets[0].lo, split.buckets[0].hi) == (hs[0], hs[-1])
+
+    one = mg.batch_key_info(df.filter("partition_id = 0"), ["k"], 1)
+    assert one.buckets[0].khashes == _khashes(spark, [1, 2, 3])
+
+
+def test_batch_key_info_batched_equals_per_range(spark, monkeypatch):
+    """The batch-grouped scan (replay) equals the unbatched scan (apply
+    and fold) on every offset range, empty ranges included; a source
+    without ``partition_id`` (the fold's) gets the same key info and no
+    offsets."""
+    import binlog_es_go_spark.lake.merge as mg
+    from binlog_es_go_spark.cdc.events import flatten_changelog
+
+    # 200 keys over 8 buckets, 3 partitions: the 100-event range keeps
+    # every bucket's set under the cap, the wider ranges overflow it
+    monkeypatch.setattr(mg, "KEY_PRUNE_CAP", 20)
+    flat = flatten_changelog(_doc_events(spark, 1000)).cache()
+    bounds = [300, 800, 900, 5000]
+    batch = F.size(F.filter(F.lit(bounds), lambda b: F.col("offset") >= b))
+    per_batch = mg.batch_key_info(flat, ["k"], 8, batch=batch)
+    assert sorted(per_batch) == [0, 1, 2, 3]  # [5000, inf) is empty
+
+    cuts = [None, *bounds, None]
+    exact = overflow = 0
+    for i in range(len(bounds) + 1):
+        part = flat
+        if cuts[i] is not None:
+            part = part.filter(F.col("offset") >= cuts[i])
+        if cuts[i + 1] is not None:
+            part = part.filter(F.col("offset") < cuts[i + 1])
+        alone = mg.batch_key_info(part, ["k"], 8)
+        assert per_batch.get(i, mg.BatchKeys(offsets={}, buckets={})) == alone, i
+        no_pid = mg.batch_key_info(part.drop("partition_id"), ["k"], 8)
+        assert no_pid.offsets == {} and no_pid.buckets == alone.buckets, i
+        exact += sum(v.khashes is not None for v in alone.buckets.values())
+        overflow += sum(v.khashes is None for v in alone.buckets.values())
+    assert exact and overflow, (exact, overflow)
+    flat.unpersist()
 
 
 def test_small_batch_merge_plans_single_exchange(spark, tmp_path):
