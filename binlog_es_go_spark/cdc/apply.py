@@ -230,7 +230,9 @@ def apply_batch(
             compact_deltas(table, salt_partitions=salt_partitions)
         from binlog_es_go_spark.lake.merge import merge_into_delta
 
-        result = merge_into_delta(table, flat, properties_fn=props_after_write)
+        result = merge_into_delta(
+            table, flat, properties_fn=props_after_write, key_info=kinfo
+        )
     else:
         result = merge_into(
             table,

@@ -62,7 +62,7 @@ def compact(
     snap = table.snapshot()
     if buckets is not None and not buckets:
         return snap.version
-    df = table.read(include_deleted=True, buckets=buckets)
+    df = table.read(include_deleted=True, buckets=buckets, version=snap.version)
     obs = None
     if drop_tombstones_below is not None:
         from pyspark.sql import Observation
@@ -150,7 +150,7 @@ def rebucket(
         return snap.version
     if new_n_buckets < 1:
         raise ValueError("new_n_buckets must be >= 1")
-    df = table.read(include_deleted=True)  # tombstones kept, deltas folded
+    df = table.read(include_deleted=True, version=snap.version)  # tombstones kept, deltas folded
     df = df.withColumn(BUCKET_COL, bucket_expr(snap.key_cols, new_n_buckets))
     k = max(1, target_files_per_bucket)
     span = -(-(1 << 32) // k)

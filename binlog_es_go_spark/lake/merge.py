@@ -57,7 +57,6 @@ tuning knob, same math).
 
 from __future__ import annotations
 
-import bisect
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -68,10 +67,14 @@ from pyspark.sql import types as T
 from binlog_es_go_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
+    KEY_PRUNE_CAP,
     KHASH_COL,
+    BatchKeyInfo,
     LakeTable,
     align_to_schema,
     bucket_expr,
+    deltas_for,
+    file_may_hold,
     khash_expr,
     merge_schemas,
     retry_on_conflict,
@@ -82,11 +85,6 @@ OP_COL = "op"
 SEQ_COL = "seq_in_tx"
 TS_COL = "ts"
 ENGINE_COLS = ("last_offset", "last_seq", "last_op", DELETED_COL, "updated_at", KHASH_COL)
-
-# Per-bucket cap on the exact batch-key-hash set shipped to the driver for
-# file pruning: above it, pruning falls back to the [lo, hi] range. Bounds
-# the driver transfer at n_buckets * (cap+1) longs regardless of batch size.
-KEY_PRUNE_CAP = 1024
 
 # Target bytes per write task when the exchange width adapts to a small
 # pruned batch (see _merge_once): enough to keep tasks meaningful, small
@@ -130,26 +128,6 @@ def scoped_merge_conf(spark):
         yield
     finally:
         spark.conf.set(key, prev)
-
-
-@dataclass
-class BatchKeyInfo:
-    """Which key hashes a batch touches within one bucket — the driver-side
-    handle for file-granular COW. ``khashes``: the exact sorted distinct
-    crc32 set when it fit under KEY_PRUNE_CAP, else None (use [lo, hi])."""
-
-    khashes: list[int] | None
-    lo: int
-    hi: int
-
-    def may_hit(self, file_min: int, file_max: int) -> bool:
-        """Could this batch touch a file whose stored _khash range is
-        [file_min, file_max]? Conservative: False ONLY when provably
-        disjoint."""
-        if self.khashes is not None:
-            i = bisect.bisect_left(self.khashes, file_min)
-            return i < len(self.khashes) and self.khashes[i] <= file_max
-        return not (self.hi < file_min or self.lo > file_max)
 
 
 @dataclass
@@ -239,7 +217,6 @@ def plan_file_cow(
     rewrite); files of unknown size count one full WRITE_TARGET_BYTES.
     The byte total sizes the merge's write and drives the auto
     rewrite-vs-delta choice in cdc/apply.py."""
-    fstats = snap.file_stats or {}
     sizes = snap.file_sizes or {}
     rewrite: list[str] = []
     carry: dict[int, list[str]] = {}
@@ -247,11 +224,7 @@ def plan_file_cow(
     for b in range(snap.n_buckets) if kinfo is None else sorted(kinfo):
         info = None if kinfo is None else kinfo[b]
         for rel in snap.buckets.get(b, []):
-            st = fstats.get(rel, {}).get(KHASH_COL)
-            hit = True
-            if info is not None and st and st[0] is not None and st[1] is not None and not st[2]:
-                hit = info.may_hit(int(st[0]), int(st[1]))
-            if hit:
+            if info is None or file_may_hold(snap, rel, info):
                 rewrite.append(rel)
                 overlap_bytes += sizes.get(rel, WRITE_TARGET_BYTES)
             else:
@@ -380,14 +353,18 @@ def _merge_once(
     # sees every guard row that matters.
     target = table.read(files=overlap_files, include_deleted=True, resolve_deltas=False)
     # Pending merge-on-read deltas can hold a NEWER (offset, seq) for a
-    # batch key than any base file: fold the affected buckets' delta rows
-    # into the target side so the guard window sees them. The delta files
-    # stay listed (they span unaffected buckets); their now-folded rows
-    # tie with the rewritten base copies at read time and base wins ties,
-    # so leaving them is correct — compact_deltas reclaims them.
-    if snap.deltas:
+    # batch key than any base file: fold the affected buckets' rows of the
+    # deltas that may hold a batch key (deltas_for: recorded hash sets,
+    # else ranges) into the target side so the guard window sees them.
+    # The delta files stay listed (they span unaffected buckets); their
+    # now-folded rows tie with the rewritten base copies at read time and
+    # base wins ties, so leaving them is correct — compact_deltas
+    # reclaims them.
+    dfiles = deltas_for(snap, key_info)
+    if dfiles:
         target = target.unionByName(
-            table.delta_rows(version=snap.version, buckets=affected), allowMissingColumns=True
+            table.delta_rows(version=snap.version, buckets=affected, delta_files=dfiles),
+            allowMissingColumns=True,
         )
     target = align_to_schema(target, new_schema)
     tgt_norm = (
@@ -541,7 +518,12 @@ def _normalize_source(
     )
 
 
-def merge_into_delta(table: LakeTable, source: DataFrame, properties_fn=None) -> MergeResult:
+def merge_into_delta(
+    table: LakeTable,
+    source: DataFrame,
+    properties_fn=None,
+    key_info: dict[int, BatchKeyInfo] | None = None,
+) -> MergeResult:
     """Merge-on-read apply: the O(batch) tail write path.
 
     Where ``merge_into`` rewrites every base file a batch key might live
@@ -549,7 +531,7 @@ def merge_into_delta(table: LakeTable, source: DataFrame, properties_fn=None) ->
     table — the measured ~2.5 s/batch floor the round-4 verdict flagged),
     this appends the batch's within-batch LWW winners as ONE small delta
     file and touches no base file. The cross-batch (offset, seq) guard
-    DEFERS to readers (``resolve_merge_on_read``) and to the next
+    DEFERS to readers (``LakeTable.read`` and ``read_keys``) and to the next
     rewrite/compaction, both of which order by the same window — so
     delta-apply-then-read is state-identical to rewrite-apply-then-read
     (pinned against the sequential oracle in tests/test_delta_merge.py).
@@ -559,6 +541,12 @@ def merge_into_delta(table: LakeTable, source: DataFrame, properties_fn=None) ->
     resolve, with ``maintenance.compact_deltas`` folding the debt back
     into base files. The apply core auto-picks it for small batches and
     auto-folds past a debt threshold (cdc/apply.py).
+
+    ``key_info``: the batch's per-bucket key info, as ``merge_into`` takes
+    it. It prunes nothing here; when exact and small, its hash set is
+    recorded for the delta file (``Snapshot.delta_khashes``) so point
+    lookups and later rewrite merges read only the deltas that can hold
+    their keys.
     """
     snap = table.snapshot()
     payload_cols, new_schema = _evolved_schema(snap, source)
@@ -573,7 +561,7 @@ def merge_into_delta(table: LakeTable, source: DataFrame, properties_fn=None) ->
     def commit() -> MergeResult:
         with scoped_merge_conf(table.spark):
             new_snap = table.append_delta(
-                winners, properties_fn=properties_fn, new_schema=new_schema
+                winners, properties_fn=properties_fn, new_schema=new_schema, key_info=key_info
             )
         return MergeResult(
             version=new_snap.version,

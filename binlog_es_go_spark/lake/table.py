@@ -18,7 +18,10 @@ Manifest schema::
       "properties": {...},          # free-form (per-partition offsets live here too)
       "stats": {"rows": 12345},
       "file_stats": {"data/u1/_bucket=0/f.parquet":
-                     {"size": [min, max, null_count], ...}, ...}
+                     {"size": [min, max, null_count], ...}, ...},
+      "deltas": ["data/u2/part-0.parquet", ...],   # merge-on-read deltas
+      "delta_buckets": {"data/u2/part-0.parquet": [0, 5, ...]},
+      "delta_khashes": {"data/u2/part-0.parquet": [khash, ...]}
     }
 
 ``file_stats`` carries parquet footer min/max per primitive column,
@@ -34,6 +37,7 @@ reference's atomic position persistence (``pkg/position/store.go:55-72``).
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import time
@@ -56,6 +60,12 @@ KHASH_COL = "_khash"
 DELETED_COL = "_deleted"
 # Unit separator: never appears in keys, so concat_ws is injective.
 KEY_SEP = "\x1f"
+
+# Cap on an exact key-hash set the driver holds for pruning: per bucket in
+# a batch's key info (above it, pruning falls back to the [lo, hi] range;
+# bounds the driver transfer at n_buckets * (cap+1) longs regardless of
+# batch size), and per delta file in the manifest's delta_khashes.
+KEY_PRUNE_CAP = 1024
 
 
 class CommitConflict(Exception):
@@ -143,6 +153,69 @@ class Snapshot:
     # buckets) instead of O(table). Missing entries degrade to "could be
     # any bucket" (conservative).
     delta_buckets: dict[str, list[int]] = None  # type: ignore[assignment]
+    # delta file -> sorted distinct _khash values of its rows, recorded at
+    # append time from the batch's exact key info (already on the driver,
+    # no extra job) when it holds at most KEY_PRUNE_CAP hashes: point
+    # lookups and rewrite merges read only the deltas that hold a wanted
+    # hash (see deltas_for). A delta without an entry — no exact info, too
+    # many keys, pre-map manifests — falls back to its _khash min/max.
+    delta_khashes: dict[str, list[int]] = None  # type: ignore[assignment]
+
+
+@dataclass
+class BatchKeyInfo:
+    """Which key hashes a batch touches within one bucket — the driver-side
+    handle for file pruning. ``khashes``: the exact sorted distinct crc32
+    set when it fit under KEY_PRUNE_CAP, else None (use [lo, hi])."""
+
+    khashes: list[int] | None
+    lo: int
+    hi: int
+
+    def may_hit(self, file_min: int, file_max: int) -> bool:
+        """Could this batch touch a file whose stored _khash range is
+        [file_min, file_max]? Conservative: False ONLY when provably
+        disjoint."""
+        if self.khashes is not None:
+            i = bisect.bisect_left(self.khashes, file_min)
+            return i < len(self.khashes) and self.khashes[i] <= file_max
+        return not (self.hi < file_min or self.lo > file_max)
+
+
+def file_may_hold(snap: Snapshot, rel: str, info: BatchKeyInfo) -> bool:
+    """Could file ``rel`` hold a key of ``info``? Judged by the file's
+    stored _khash [min, max] (manifest file_stats); files without a
+    null-free range — pre-khash data, failed harvest — conservatively
+    may."""
+    st = (snap.file_stats or {}).get(rel, {}).get(KHASH_COL)
+    if st and st[0] is not None and st[1] is not None and not st[2]:
+        return info.may_hit(int(st[0]), int(st[1]))
+    return True
+
+
+def deltas_for(snap: Snapshot, key_info: dict[int, BatchKeyInfo] | None) -> list[str]:
+    """The pending delta files that may hold a key of ``key_info`` (per
+    bucket, as batch_key_info builds it; None = every delta) — the one
+    delta-pruning routine for point lookups and rewrite merges. A delta
+    with a recorded exact hash set (``delta_khashes``) is read only when
+    one of its hashes is wanted in that hash's bucket; any other delta
+    only when its _khash range may hold a wanted hash."""
+    rels = list(snap.deltas or [])
+    if key_info is None:
+        return rels
+    exact = snap.delta_khashes or {}
+
+    def hit(rel: str) -> bool:
+        hashes = exact.get(rel)
+        if hashes is None:
+            return any(file_may_hold(snap, rel, info) for info in key_info.values())
+        for h in hashes:
+            info = key_info.get(h % snap.n_buckets)
+            if info is not None and info.may_hit(h, h):
+                return True
+        return False
+
+    return [rel for rel in rels if hit(rel)]
 
 
 class LakeTable:
@@ -178,6 +251,7 @@ class LakeTable:
             file_sizes={},
             deltas=[],
             delta_buckets={},
+            delta_khashes={},
         )
         table._write_manifest(snap)
         table._swap_version(0, expected_parent=None)
@@ -240,6 +314,7 @@ class LakeTable:
             file_sizes=m.get("file_sizes", {}),
             deltas=m.get("deltas", []),
             delta_buckets=m.get("delta_buckets", {}),
+            delta_khashes=m.get("delta_khashes", {}),
         )
 
     def _write_manifest(self, snap: Snapshot) -> None:
@@ -256,6 +331,7 @@ class LakeTable:
             "file_sizes": snap.file_sizes or {},
             "deltas": snap.deltas or [],
             "delta_buckets": snap.delta_buckets or {},
+            "delta_khashes": snap.delta_khashes or {},
         }
         path = os.path.join(self.root, f"manifest-{snap.version}.json")
         tmp = path + f".tmp.{uuid.uuid4().hex}"
@@ -357,6 +433,10 @@ class LakeTable:
         :meth:`append_delta`) into the result by the (offset, seq) guard.
         Default: on for logical reads (``files=None``), off for explicit
         file scans — merge.py folds deltas itself with bucket scoping.
+
+        ``version=None`` is resolved ONCE, here: the base-file listing and
+        the delta listing come from the same snapshot even when a fold
+        commits while the read is being planned.
         """
         snap = self.snapshot(version)
         if resolve_deltas is None:
@@ -364,7 +444,7 @@ class LakeTable:
         rels = (
             list(files)
             if files is not None
-            else self.files_for(buckets=buckets, version=version, stats_filter=stats_filter)
+            else self.files_for(buckets=buckets, version=snap.version, stats_filter=stats_filter)
         )
         files = [os.path.join(self.root, p) for p in rels]
         if not files:
@@ -381,7 +461,7 @@ class LakeTable:
             df = self.spark.read.schema(snap.schema).parquet(*files)
             df = align_to_schema(df, snap.schema)
         if resolve_deltas and (snap.deltas or []):
-            delta = self.delta_rows(version=version, buckets=buckets)
+            delta = self.delta_rows(version=snap.version, buckets=buckets)
             df = resolve_merge_on_read(df, delta, snap.key_cols)
         if not include_deleted:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
@@ -415,10 +495,17 @@ class LakeTable:
         expected_version: int | None = None,
         properties_fn=None,
         new_schema: T.StructType | None = None,
+        key_info: dict[int, BatchKeyInfo] | None = None,
     ) -> Snapshot:
         """Merge-on-read commit: append ``df`` (already normalized to the
         engine row shape — payload + last_offset/last_seq/last_op/_deleted/
         updated_at) as ONE small delta file, touching no base file.
+
+        ``key_info``: the batch's per-bucket key info, covering every key
+        of ``df``. When every bucket's set is exact and together they hold
+        at most KEY_PRUNE_CAP hashes, the union is recorded as the delta's
+        ``delta_khashes`` entry, so lookups skip deltas that lack their
+        keys; otherwise the delta is pruned by its _khash range.
 
         The write is O(batch): no target read, no guard window, no
         rewrite. The (offset, seq) guard DEFERS to read time — readers
@@ -450,6 +537,11 @@ class LakeTable:
         )
         out.coalesce(1).sortWithinPartitions(KHASH_COL).write.parquet(out_dir, mode="errorifexists")
         touched = sorted(int(b) for b in (obs.get.get("bks") or []))
+        khashes = None
+        if key_info and all(i.khashes is not None for i in key_info.values()):
+            khashes = sorted({h for i in key_info.values() for h in i.khashes})
+            if len(khashes) > KEY_PRUNE_CAP:
+                khashes = None
 
         rels, sizes = [], {}
         for dirpath, _, fns in os.walk(out_dir):
@@ -484,6 +576,10 @@ class LakeTable:
             file_sizes=file_sizes,
             deltas=list(base.deltas or []) + sorted(rels),
             delta_buckets={**(base.delta_buckets or {}), **{r: touched for r in rels}},
+            delta_khashes={
+                **(base.delta_khashes or {}),
+                **({r: khashes for r in rels} if khashes is not None else {}),
+            },
         )
         self._write_manifest(snap)
         self._swap_version(snap.version, expected_parent=base.version)
@@ -511,6 +607,7 @@ class LakeTable:
             file_sizes={p: s for p, s in (base.file_sizes or {}).items() if p not in drop},
             deltas=keep,
             delta_buckets={r: b for r, b in (base.delta_buckets or {}).items() if r not in drop},
+            delta_khashes={r: h for r, h in (base.delta_khashes or {}).items() if r not in drop},
         )
         self._write_manifest(snap)
         self._swap_version(snap.version, expected_parent=base.version)
@@ -660,6 +757,7 @@ class LakeTable:
             file_sizes=file_sizes,
             deltas=list(base.deltas or []),
             delta_buckets=dict(base.delta_buckets or {}),
+            delta_khashes=dict(base.delta_khashes or {}),
         )
         self._write_manifest(snap)
         self._swap_version(snap.version, expected_parent=base.version)
@@ -683,70 +781,95 @@ class LakeTable:
         The key hashes are computed DRIVER-SIDE with zlib.crc32 over the
         same unit-separated string Spark's ``crc32`` hashes (golden-vector
         pinned in tests), so the scan set is resolved from the manifest
-        alone: only files whose stored ``_khash`` range can contain one of
-        the keys are read — with khash-clustered files a lookup touches
-        O(len(keys)) files no matter how large the table is. Values are
-        stringified exactly as Spark casts them (exact for string and
-        integer key columns — the supported key types).
+        alone: the base files of the keys' buckets whose stored ``_khash``
+        range can contain one of the keys, plus the pending deltas whose
+        recorded hash set (or, without one, whose range) can — with
+        khash-clustered files a lookup touches O(len(keys)) files no
+        matter how large the table is. Values are stringified exactly as
+        Spark casts them (exact for string and integer key columns — the
+        supported key types).
+
+        The scanned rows are resolved in ONE guard window over the key
+        columns — the (offset, seq) order of a logical read, base winning
+        full ties — after a ``_khash`` filter has cut them to the wanted
+        hashes, so the window sees a handful of rows. The final filter on
+        the joined key drops crc32 collisions.
         """
         import zlib
 
         snap = self.snapshot(version)
         if not keys:
-            return self.read(files=[], version=version)
-        want: list[tuple[int, int, str]] = []  # (bucket, khash, joined)
+            return self.read(files=[], version=snap.version)
+        joined_keys: list[str] = []
+        by_bucket: dict[int, set[int]] = {}
         for kt in keys:
             vals = kt if isinstance(kt, (tuple, list)) else (kt,)
             if len(vals) != len(snap.key_cols):
                 raise ValueError(f"key {kt!r} arity != key_cols {snap.key_cols}")
             joined = KEY_SEP.join("" if v is None else str(v) for v in vals)
             kh = zlib.crc32(joined.encode("utf-8"))
-            want.append((kh % snap.n_buckets, kh, joined))
+            joined_keys.append(joined)
+            by_bucket.setdefault(kh % snap.n_buckets, set()).add(kh)
+        key_info = {
+            b: BatchKeyInfo(khashes=sorted(hs), lo=min(hs), hi=max(hs))
+            for b, hs in sorted(by_bucket.items())
+        }
 
-        import bisect
-
-        fstats = snap.file_stats or {}
-
-        def may_contain(rel: str, hashes: list[int]) -> bool:
-            st = fstats.get(rel, {}).get(KHASH_COL)
-            if st and st[0] is not None and st[1] is not None and not st[2]:
-                i = bisect.bisect_left(hashes, int(st[0]))
-                return i < len(hashes) and hashes[i] <= int(st[1])
-            return True  # no stats: conservatively read
-
-        files: list[str] = []
-        for b in sorted({w[0] for w in want}):
-            hashes = sorted(w[1] for w in want if w[0] == b)
-            files.extend(
-                rel for rel in snap.buckets.get(b, []) if may_contain(rel, hashes)
-            )
-
-        df = self.read(files=files, include_deleted=True, version=version,
+        files = [
+            rel
+            for b, info in key_info.items()
+            for rel in snap.buckets.get(b, [])
+            if file_may_hold(snap, rel, info)
+        ]
+        df = self.read(files=files, include_deleted=True, version=snap.version,
                        resolve_deltas=False)
         # Pending deltas can hold a newer version of a looked-up key (or
-        # its tombstone): fold the khash-pruned delta files in by the same
-        # guard resolution a logical read uses.
-        all_hashes = sorted({w[1] for w in want})
-        dfiles = [rel for rel in (snap.deltas or []) if may_contain(rel, all_hashes)]
+        # its tombstone): union the deltas that may hold one and keep the
+        # guard winner per key.
+        dfiles = deltas_for(snap, key_info)
         if dfiles:
-            df = resolve_merge_on_read(
-                df, self.delta_rows(version=version, delta_files=dfiles), snap.key_cols
+            delta = self.delta_rows(version=snap.version, delta_files=dfiles)
+            df = df.withColumn("_is_base", F.lit(1)).unionByName(
+                delta.withColumn("_is_base", F.lit(0))
             )
+        hashes = sorted({h for hs in by_bucket.values() for h in hs})
+        # pre-khash files carry a NULL _khash: kept, the key filter decides
+        df = df.filter(F.col(KHASH_COL).isNull() | F.col(KHASH_COL).isin(hashes))
+        if dfiles:
+            df = latest_per_key(df, snap.key_cols)
         if not include_deleted:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         joined_expr = F.concat_ws(
             KEY_SEP,
             *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in snap.key_cols],
         )
-        return df.filter(joined_expr.isin([w[2] for w in want]))
+        return df.filter(joined_expr.isin(joined_keys))
+
+
+def latest_per_key(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Rank 1 per key of base (``_is_base`` = 1) and delta (0) rows by the
+    (offset, seq) guard — the read side of the write-side window in
+    merge.py, same ordering, base winning full ties (a folded-then-
+    lingering delta row is byte-identical to its base copy, so the
+    tie-break only picks which identical row survives)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*key_cols).orderBy(
+        F.col("last_offset").desc_nulls_last(),
+        F.coalesce(F.col("last_seq"), F.lit(0)).desc(),
+        F.col("_is_base").desc(),
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_is_base")
+    )
 
 
 def resolve_merge_on_read(base: DataFrame, delta: DataFrame, key_cols: list[str]) -> DataFrame:
     """Fold pending delta rows into a base scan by the (offset, seq)
-    guard — the read-side of the write-side window in merge.py, same
-    ordering, base winning full ties (a folded-then-lingering delta row
-    is byte-identical to its base copy, so the tie-break only picks which
-    identical row survives).
+    guard (see latest_per_key). Serves full and bucket-pruned scans only:
+    point lookups resolve their few rows in one window (read_keys).
 
     Scale shape: base rows whose key has NO delta pass through untouched
     via a broadcast LEFT ANTI against the (small, fold-policy-bounded)
@@ -754,25 +877,13 @@ def resolve_merge_on_read(base: DataFrame, delta: DataFrame, key_cols: list[str]
     single pending delta row costs one broadcast anti-join over the scan,
     not a table-wide shuffle.
     """
-    from pyspark.sql import Window
-
     dkeys = delta.select(*key_cols).distinct()
     untouched = base.join(F.broadcast(dkeys), on=key_cols, how="left_anti")
     touched = base.join(F.broadcast(dkeys), on=key_cols, how="left_semi")
     combined = touched.withColumn("_is_base", F.lit(1)).unionByName(
         delta.withColumn("_is_base", F.lit(0))
     )
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("last_offset").desc_nulls_last(),
-        F.coalesce(F.col("last_seq"), F.lit(0)).desc(),
-        F.col("_is_base").desc(),
-    )
-    winners = (
-        combined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_is_base")
-    )
-    return untouched.unionByName(winners)
+    return untouched.unionByName(latest_per_key(combined, key_cols))
 
 
 _STATS_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType,

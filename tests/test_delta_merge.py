@@ -8,6 +8,9 @@ bounded read-time resolution, reclaimed by compact_deltas)."""
 
 from __future__ import annotations
 
+import hashlib
+import zlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -16,9 +19,10 @@ from pyspark.sql import types as T
 from binlog_es_go_spark.cdc.apply import apply_batch, applied_offsets
 from binlog_es_go_spark.cdc.events import generate_changelog
 from binlog_es_go_spark.cdc.oracle import apply_sequential, table_digest
+from binlog_es_go_spark.lake import table as table_mod
 from binlog_es_go_spark.lake.changes import snapshot_changes
 from binlog_es_go_spark.lake.maintenance import compact, compact_deltas
-from binlog_es_go_spark.lake.table import LakeTable
+from binlog_es_go_spark.lake.table import KEY_SEP, LakeTable
 
 PAYLOAD = T.StructType(
     [T.StructField(n, T.StringType()) for n in ["repo", "path", "commit", "lang", "content"]]
@@ -206,3 +210,239 @@ def test_delta_fold_after_threshold_bounds_debt(spark, tmp_path, log):
     oracle = apply_sequential(_slice(log, 0, 2300).toPandas())
     got = t.read().select("repo", "path", "content").toPandas()
     assert table_digest(got) == table_digest(oracle[["repo", "path", "content"]])
+
+
+# ------------------------------------------------ point lookups, key maps
+EVENT_SCHEMA = (
+    "offset long, partition_id int, seq_in_tx int, op string, repo string, path string, "
+    "before struct<commit:string,lang:string,content:string>, "
+    "after struct<commit:string,lang:string,content:string>, ts timestamp"
+)
+
+
+def _ev(offset, op, repo, path, content):
+    after = None if op == "delete" else ("c" * 40, "py", content)
+    return (offset, 0, 0, op, repo, path, None, after, None)
+
+
+def _khash(key):
+    return zlib.crc32(KEY_SEP.join(key).encode("utf-8"))
+
+
+def _oracle_rows(events):
+    pdf = pd.DataFrame(events, columns=[
+        "offset", "partition_id", "seq_in_tx", "op", "repo", "path", "before", "after", "ts"])
+    pdf["after"] = [
+        None if a is None else {"commit": a[0], "lang": a[1], "content": a[2]} for a in pdf["after"]
+    ]
+    state = apply_sequential(pdf)
+    return {(r.repo, r.path): r.content for r in state.itertuples(index=False)}
+
+
+def _lookup(table, keys):
+    return {(r["repo"], r["path"]): r["content"] for r in table.read_keys(keys).collect()}
+
+
+def _check_key_map(snap):
+    """Manifest bound: every delta_khashes entry names a listed delta and
+    holds a sorted set of at most KEY_PRUNE_CAP hashes."""
+    assert set(snap.delta_khashes) <= set(snap.deltas)
+    for hashes in snap.delta_khashes.values():
+        assert len(hashes) <= table_mod.KEY_PRUNE_CAP
+        assert hashes == sorted(set(hashes))
+
+
+def test_read_pins_one_snapshot_across_a_fold(spark, tmp_path, log, monkeypatch):
+    """A fold committing between the base-file listing and the delta
+    listing of one read must not mix snapshots: the read returns the state
+    of the version it started on, folded updates included."""
+    t = fresh(spark, tmp_path)
+    apply_batch(t, _slice(log, 0, 2500), batch_id=0)
+    apply_batch(t, _slice(log, 2500, 3000), batch_id=1, write_mode="delta")
+    v = t.current_version()
+    want = _digest(t)
+
+    orig = LakeTable.files_for
+    folded = []
+
+    def files_then_fold(self, *args, **kwargs):
+        out = orig(self, *args, **kwargs)
+        if not folded:
+            folded.append(None)
+            folded[0] = compact_deltas(self)
+        return out
+
+    monkeypatch.setattr(LakeTable, "files_for", files_then_fold)
+    got = _digest(t)
+    monkeypatch.undo()
+    assert folded[0] is not None and t.current_version() > v and not t.snapshot().deltas
+    assert got == want
+
+
+def test_read_keys_with_crc32_collision(spark, tmp_path):
+    """Two keys with one crc32: one in base, one in a pending delta, at
+    different versions. Each lookup returns exactly its own latest row,
+    and a rewrite commit of one key leaves the other at the oracle state."""
+    # Birthday search over pseudo-random repo names (a pair turns up within
+    # ~10^5). Names differing only in a few digit bytes would not do: crc32
+    # maps equal-length strings that differ within 32 bits to distinct values.
+    seen: dict[int, tuple] = {}
+    for i in range(1_000_000):
+        b = (hashlib.sha1(str(i).encode()).hexdigest()[:12], "x.py")
+        a = seen.setdefault(_khash(b), b)
+        if a != b:
+            break
+    else:
+        pytest.fail("no crc32 collision found")
+    assert _khash(a) == _khash(b)
+
+    t = fresh(spark, tmp_path, n_buckets=4)
+    events = [_ev(1, "insert", *a, "a1"), _ev(2, "insert", "other", "o.py", "o1")]
+    apply_batch(t, spark.createDataFrame(events, EVENT_SCHEMA), batch_id=0)
+    batch = [_ev(5, "insert", *b, "b1")]
+    events += batch
+    apply_batch(t, spark.createDataFrame(batch, EVENT_SCHEMA), batch_id=1, write_mode="delta")
+    assert t.snapshot().deltas
+    assert _lookup(t, [a]) == {a: "a1"}
+    assert _lookup(t, [b]) == {b: "b1"}
+    assert _lookup(t, [a, b]) == {a: "a1", b: "b1"}
+
+    batch = [_ev(9, "update", *a, "a2")]
+    events += batch
+    apply_batch(t, spark.createDataFrame(batch, EVENT_SCHEMA), batch_id=2, write_mode="rewrite")
+    oracle = _oracle_rows(events)
+    assert _lookup(t, [b]) == {b: oracle[b]}
+    assert _lookup(t, [a]) == {a: oracle[a]} == {a: "a2"}
+    got = {(r["repo"], r["path"]): r["content"] for r in t.read().collect()}
+    assert got == oracle
+
+
+def test_delta_key_map_tracks_delta_listing(spark, tmp_path, log):
+    """delta_khashes keys stay a subset of the listed deltas through
+    appends, the fold's drop, full compaction and rebucketing."""
+    from binlog_es_go_spark.lake.maintenance import rebucket
+
+    t = fresh(spark, tmp_path)
+    apply_batch(t, _slice(log, 0, 2000), batch_id=0)
+    _check_key_map(t.snapshot())
+    for i in range(2):
+        apply_batch(t, _slice(log, 2000 + i * 100, 2100 + i * 100),
+                    batch_id=1 + i, write_mode="delta")
+        snap = t.snapshot()
+        _check_key_map(snap)
+        assert set(snap.delta_khashes) == set(snap.deltas)
+    compact_deltas(t)
+    snap = t.snapshot()
+    _check_key_map(snap)
+    assert not snap.deltas and not snap.delta_khashes
+
+    apply_batch(t, _slice(log, 2200, 2300), batch_id=3, write_mode="delta")
+    _check_key_map(t.snapshot())
+    compact(t)
+    snap = t.snapshot()
+    _check_key_map(snap)
+    assert not snap.delta_khashes
+
+    apply_batch(t, _slice(log, 2300, 2400), batch_id=4, write_mode="delta")
+    assert t.snapshot().delta_khashes
+    rebucket(t, 4)
+    snap = t.snapshot()
+    _check_key_map(snap)
+    assert snap.n_buckets == 4 and not snap.delta_khashes
+    oracle = apply_sequential(_slice(log, 0, 2400).toPandas())
+    assert _digest(t) == table_digest(oracle[["repo", "path", "content"]])
+
+
+def test_delta_over_key_cap_gets_no_entry(spark, tmp_path, log, monkeypatch):
+    """A delta with more hashes than KEY_PRUNE_CAP is recorded without a
+    key set and pruned by its range; lookups through it stay exact."""
+    monkeypatch.setattr(table_mod, "KEY_PRUNE_CAP", 20)
+    t = fresh(spark, tmp_path)
+    apply_batch(t, _slice(log, 0, 2000), batch_id=0)
+    apply_batch(t, _slice(log, 2000, 2400), batch_id=1, write_mode="delta")  # > 20 keys
+    big = t.snapshot().deltas[0]
+    small_batch = [_ev(10_000, "update", "solo", "s.py", "s1")]
+    apply_batch(t, spark.createDataFrame(small_batch, EVENT_SCHEMA), batch_id=2,
+                write_mode="delta")
+    snap = t.snapshot()
+    _check_key_map(snap)
+    assert big not in snap.delta_khashes
+    assert list(snap.delta_khashes) == [snap.deltas[1]]
+
+    rows = _slice(log, 2000, 2400).select("repo", "path").distinct().collect()
+    keys = [(r["repo"], r["path"]) for r in rows[:15]]
+    oracle = apply_sequential(_slice(log, 0, 2400).toPandas())
+    want = {(r.repo, r.path): r.content for r in oracle.itertuples(index=False)}
+    assert _lookup(t, keys) == {k: want[k] for k in keys if k in want}
+    assert _lookup(t, [("solo", "s.py")]) == {("solo", "s.py"): "s1"}
+
+
+def test_manifest_without_key_map_still_reads(spark, tmp_path, log):
+    """A manifest written before delta_khashes existed loads and looks up
+    the same rows (every delta falls back to its range)."""
+    import json
+
+    t = fresh(spark, tmp_path)
+    apply_batch(t, _slice(log, 0, 2500), batch_id=0)
+    apply_batch(t, _slice(log, 2500, 2700), batch_id=1, write_mode="delta")
+    snap = t.snapshot()
+    assert snap.delta_khashes
+    rows = _slice(log, 2500, 2700).select("repo", "path").distinct().collect()
+    keys = [(r["repo"], r["path"]) for r in rows[:10]] + [("no", "such.py")]
+    before = _lookup(t, keys)
+    assert before
+
+    path = tmp_path / "t" / f"manifest-{snap.version}.json"
+    m = json.loads(path.read_text())
+    del m["delta_khashes"]
+    path.write_text(json.dumps(m))
+    assert t.snapshot().delta_khashes == {}
+    assert _lookup(t, keys) == before
+    oracle = apply_sequential(_slice(log, 0, 2700).toPandas())
+    assert _digest(t) == table_digest(oracle[["repo", "path", "content"]])
+
+
+def test_rewrite_reads_only_deltas_meeting_the_batch(spark, tmp_path, monkeypatch):
+    """A rewrite commit while deltas are pending in buckets its batch
+    misses reads only the deltas that hold a batch key; the state still
+    equals the sequential oracle."""
+    n = 4
+    by_bucket: dict[int, list[tuple]] = {}
+    for i in range(200):
+        key = (f"r{i}", "f.py")
+        by_bucket.setdefault(_khash(key) % n, []).append(key)
+    t = fresh(spark, tmp_path, n_buckets=n)
+    events = [_ev(o, "insert", *k, "v0") for o, k in enumerate(
+        k for b in range(n) for k in by_bucket[b][:8])]
+    apply_batch(t, spark.createDataFrame(events, EVENT_SCHEMA), batch_id=0)
+    offset = 1000
+    for b in range(3):  # one delta per bucket 0..2
+        batch = [_ev(offset + j, "update", *k, f"d{b}") for j, k in enumerate(by_bucket[b][:4])]
+        offset += 100
+        events += batch
+        apply_batch(t, spark.createDataFrame(batch, EVENT_SCHEMA), batch_id=1 + b,
+                    write_mode="delta")
+    snap = t.snapshot()
+    assert len(snap.deltas) == 3 and set(snap.delta_khashes) == set(snap.deltas)
+
+    reads = []
+    orig = LakeTable.delta_rows
+
+    def spy(self, *args, **kwargs):
+        reads.append(kwargs.get("delta_files"))
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "delta_rows", spy)
+    # bucket 0 keys (one held by delta 0) plus a fresh bucket-3 key
+    batch = [_ev(offset, "update", *by_bucket[0][1], "w"),
+             _ev(offset + 1, "insert", *by_bucket[3][9], "w")]
+    events += batch
+    apply_batch(t, spark.createDataFrame(batch, EVENT_SCHEMA), batch_id=9, write_mode="rewrite")
+    monkeypatch.undo()
+    assert reads == [[snap.deltas[0]]]
+
+    oracle = _oracle_rows(events)
+    got = {(r["repo"], r["path"]): r["content"] for r in t.read().collect()}
+    assert got == oracle
+    keys = [by_bucket[b][j] for b in range(n) for j in (0, 1, 9)]
+    assert _lookup(t, keys) == {k: oracle[k] for k in keys if k in oracle}

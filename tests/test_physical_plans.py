@@ -201,3 +201,31 @@ def test_lsh_index_probe_scan_not_shuffled_whole(spark, tmp_path):
     assert plan.count("BroadcastExchange") >= 2, plan[:1200]
     for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
         assert marker not in plan, f"Python in the probe path: {marker}"
+
+
+def test_read_keys_resolves_deltas_in_one_window(spark, tmp_path):
+    """A point lookup with pending deltas resolves its few pruned rows in
+    ONE guard window — no broadcast anti/semi join pair, which is the
+    full-scan shape of resolve_merge_on_read."""
+    import re
+
+    from binlog_es_go_spark.cdc.apply import apply_batch
+    from binlog_es_go_spark.lake.table import LakeTable
+
+    payload = T.StructType([T.StructField(n, T.StringType()) for n in ("repo", "path", "content")])
+    schema = ("offset long, partition_id int, seq_in_tx int, op string, repo string, "
+              "path string, after struct<content:string>, ts timestamp")
+    t = LakeTable.create(spark, str(tmp_path / "pt"), payload, ["repo", "path"], n_buckets=4)
+
+    def batch(offset, n, content):
+        rows = [(offset + i, 0, 0, "update", f"r{i}", "a.py", (content,), None) for i in range(n)]
+        return spark.createDataFrame(rows, schema)
+
+    apply_batch(t, batch(0, 20, "v0"), batch_id=0)
+    apply_batch(t, batch(100, 5, "v1"), batch_id=1, write_mode="delta")
+    assert t.snapshot().deltas
+    df = t.read_keys([("r1", "a.py"), ("r7", "a.py")])
+    plan = plan_of(df)
+    assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan, plan[:1500]
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan[:1500]
+    assert sorted((r["repo"], r["content"]) for r in df.collect()) == [("r1", "v1"), ("r7", "v0")]
