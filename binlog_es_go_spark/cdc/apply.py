@@ -24,14 +24,19 @@ from pyspark.sql import functions as F
 
 from binlog_es_go_spark.cdc.events import flatten_changelog
 from binlog_es_go_spark.lake.merge import (
+    SMALL_COMMIT_BYTES,
+    WRITE_TARGET_BYTES,
     BatchKeys,
     MergeResult,
     batch_key_info,
     dedup_last_writer,
     merge_into,
+    merge_into_delta,
+    observe_batch_keys,
+    observed_batch_keys,
     plan_file_cow,
 )
-from binlog_es_go_spark.lake.table import LakeTable
+from binlog_es_go_spark.lake.table import BatchKeyInfo, DeltaDeclined, LakeTable
 
 OFFSETS_PROP = "stream_offsets"  # properties key: {partition_id: max offset applied}
 LINEAGE_PROP = "lineage"         # properties key: list of per-batch metric rows
@@ -84,12 +89,13 @@ def apply_batch(
       O(batch) per batch; readers resolve by the same (offset, seq) guard.
     * ``"auto"`` (default) — delta when the batch is PROVABLY small
       (every bucket's key set exact under the prune cap and total keys <=
-      ``delta_max_batch_keys``), rewrite otherwise. Once
+      ``delta_max_batch_keys``) and a rewrite would move far more bytes
+      than the batch carries, rewrite otherwise. Once
       ``delta_fold_after`` delta commits have accumulated, the debt is
-      folded (maintenance.compact_deltas) before the next delta append —
-      so steady-state tail cost is O(batch) per commit plus one amortized
-      rewrite every ``delta_fold_after`` commits, and read-side resolve
-      work stays bounded.
+      folded (maintenance.compact_deltas) before the next delta is
+      linked — so steady-state tail cost is O(batch) per commit plus one
+      amortized rewrite every ``delta_fold_after`` commits, and read-side
+      resolve work stays bounded. An empty batch commits nothing.
 
     ``mapper``: optional enrichment/field-mapping stage (the analog of the
     reference's mapping SQL, ``pkg/db/mysql.go:124-180``) applied to the
@@ -108,9 +114,29 @@ def apply_batch(
     (``replay_changelog`` computes it for ALL its batches in one scan)
     skip the per-batch metadata job entirely while keeping file-granular
     COW pruning and the small-batch write shape. Without it, the default
-    ``prune_buckets=True`` runs that one scan here; ``prune_buckets=False``
-    is the bulk shape — every bucket rewritten unpruned, offsets observed
-    during the write as under ``stream_partitions``.
+    ``prune_buckets=True`` learns it one of two ways:
+
+    * write -> decide -> link, for a batch that is provably small (the
+      optimizer's size estimate of the flattened batch at most
+      SMALL_COMMIT_BYTES, a plan statistic that costs no job) and may go
+      delta (``"delta"``, or ``"auto"`` on a table whose base files hold
+      at least DELTA_MIN_REWRITE_BYTES — below that the rewrite is
+      certain): the delta file is written first, the key info observed
+      on that write job (lake.merge.observe_batch_keys), the decision
+      made on it, and the file then linked — or, on a rewrite decision,
+      removed and the batch merged with the observed key info. One Spark
+      job per delta commit.
+    * otherwise one batch_key_info scan before the merge.
+
+    ``prune_buckets=False`` is the bulk shape — every bucket rewritten
+    unpruned, offsets observed during the write as under
+    ``stream_partitions``.
+
+    Each commit appends a LINEAGE_PROP row holding its offsets, wall time
+    and write decision: ``mode`` (delta or rewrite), ``n_keys`` (None
+    unless every bucket's key set is exact), ``overlap_bytes`` (the base
+    bytes a rewrite would move; None without key info) and ``key_info``
+    (``observed``, ``scanned``, or None for the bulk shape).
     """
     t0 = time.time()
     snap = table.snapshot()
@@ -120,17 +146,21 @@ def apply_batch(
     obs = None
     obs_pids: range | None = None
     obs_strict = False
-    offs: dict[str, int] = {}
-    kinfo = None
+    key_obs = None
+    key_source = "scanned" if batch_keys is not None else None
     if batch_keys is None and prune_buckets:
-        # incremental tail: a micro-batch touches few buckets — discover
-        # them (plus per-partition offsets and the per-bucket key-hash
-        # sets that drive file-granular COW) in one column-pruned scan so
-        # the MERGE reads O(batch) target files, not O(table)
-        batch_keys = batch_key_info(flat, snap.key_cols, snap.n_buckets)
-    if batch_keys is not None:
-        offs, kinfo = batch_keys.offsets, batch_keys.buckets
-    else:
+        # incremental tail: a micro-batch touches few buckets — learn them
+        # (plus per-partition offsets and the per-bucket key-hash sets
+        # that drive file-granular COW) so the MERGE reads O(batch) target
+        # files, not O(table): observed on the delta write when the batch
+        # is provably small, else in one column-pruned scan
+        if _may_observe_keys(flat, snap, write_mode):
+            flat, key_obs = observe_batch_keys(flat, snap.key_cols)
+            key_source = "observed"
+        else:
+            batch_keys = batch_key_info(flat, snap.key_cols, snap.n_buckets)
+            key_source = "scanned"
+    if batch_keys is None and key_obs is None:
         # bulk replay/bootstrap: batches touch ~every bucket, so bucket
         # discovery is pure serial overhead — rewrite all buckets and
         # collect per-partition offsets as Observation metrics DURING the
@@ -163,13 +193,15 @@ def apply_batch(
         # reference's batch-recompute amortization, flush.go:39)
         flat = mapper(dedup_last_writer(flat, snap.key_cols))
 
+    decision: dict = {"key_info": key_source}
+
     def props_after_write(base_props: dict) -> dict:
         # ``base_props`` is the properties of the snapshot the commit is
         # actually building on — on a CommitConflict retry that is NEWER
         # than ``snap`` captured above, and merging against the stale copy
         # would silently drop/regress the other writer's per-partition
         # offsets (and, later, inflate the tombstone-GC watermark).
-        batch_offs = dict(offs)
+        batch_offs = dict(batch_keys.offsets) if batch_keys is not None else {}
         if obs is not None:
             got = obs.get
             max_pid = got.get("max_pid")
@@ -202,47 +234,97 @@ def apply_batch(
                     "source": source,
                     "offsets": batch_offs,
                     "wall_sec": round(time.time() - t0, 2),
+                    **decision,
                 }
             ],
             **(extra_properties or {}),
         }
 
-    use_delta = write_mode == "delta"
-    if write_mode == "auto" and kinfo:
-        exact = all(i.khashes is not None for i in kinfo.values())
-        if exact:
-            n_keys = sum(len(i.khashes) for i in kinfo.values())
+    def use_delta(kinfo: dict[int, BatchKeyInfo] | None) -> bool:
+        """The write-mode decision; its inputs go to the lineage row."""
+        n_keys = overlap = None
+        if kinfo is not None:
             overlap = plan_file_cow(snap, kinfo)[2]
+            if all(i.khashes is not None for i in kinfo.values()):
+                n_keys = sum(len(i.khashes) for i in kinfo.values())
+        if kinfo == {}:
+            delta = False  # empty batch: the rewrite path commits nothing
+        elif write_mode == "auto":
             # delta pays off when the rewrite would move far more bytes
             # than the batch carries (~1 KB/key is generous); bulk loads
             # and cheap surgical rewrites keep the copy-on-write path
-            use_delta = (
-                n_keys <= delta_max_batch_keys
+            delta = (
+                n_keys is not None
+                and n_keys <= delta_max_batch_keys
                 and overlap >= DELTA_MIN_REWRITE_BYTES
                 and overlap >= DELTA_MIN_AMPLIFICATION * n_keys * 1024
             )
-    if use_delta:
+        else:
+            delta = write_mode == "delta"
+        decision.update(mode="delta" if delta else "rewrite", n_keys=n_keys, overlap_bytes=overlap)
+        return delta
+
+    def fold_if_due() -> None:
         if len(snap.deltas or []) >= delta_fold_after:
-            # fold the accumulated delta debt ONCE, then append — the
+            # fold the accumulated delta debt ONCE, then link — the
             # amortized rewrite that keeps reader resolve work bounded
             from binlog_es_go_spark.lake.maintenance import compact_deltas
 
             compact_deltas(table, salt_partitions=salt_partitions)
-        from binlog_es_go_spark.lake.merge import merge_into_delta
 
-        result = merge_into_delta(
-            table, flat, properties_fn=props_after_write, key_info=kinfo
-        )
-    else:
-        result = merge_into(
+    def rewrite() -> MergeResult:
+        return merge_into(
             table,
             flat,
             salt_partitions=salt_partitions,
             properties_fn=props_after_write,
-            key_info=kinfo,
+            key_info=batch_keys.buckets if batch_keys is not None else None,
         )
+
+    if key_obs is not None:
+        # write -> decide -> link: the delta write observes the key info
+        def decide() -> dict[int, BatchKeyInfo] | None:
+            nonlocal batch_keys
+            batch_keys = observed_batch_keys(key_obs, snap.n_buckets)
+            if not use_delta(batch_keys.buckets):
+                return None
+            fold_if_due()
+            return batch_keys.buckets
+
+        try:
+            result = merge_into_delta(
+                table, flat, properties_fn=props_after_write, before_link=decide
+            )
+        except DeltaDeclined:
+            result = rewrite()
+    else:
+        kinfo = batch_keys.buckets if batch_keys is not None else None
+        if use_delta(kinfo):
+            fold_if_due()
+            result = merge_into_delta(table, flat, properties_fn=props_after_write, key_info=kinfo)
+        else:
+            result = rewrite()
     result.wall_sec = time.time() - t0
     return result
+
+
+def _may_observe_keys(flat: DataFrame, snap, write_mode: str) -> bool:
+    """Whether apply_batch learns the batch's key info on its delta write
+    (see apply_batch): the commit may go delta, and the batch is provably
+    small by the optimizer's size estimate — a driver-side plan statistic,
+    no job. Sources Spark cannot size (an RDD-backed dump, say) estimate
+    at its huge default and keep the scan."""
+    if write_mode == "rewrite":
+        return False
+    if write_mode == "auto":
+        sizes = snap.file_sizes or {}
+        base_bytes = sum(
+            sizes.get(rel, WRITE_TARGET_BYTES) for fl in snap.buckets.values() for rel in fl
+        )
+        if base_bytes < DELTA_MIN_REWRITE_BYTES:
+            return False  # no overlap can reach the delta floor: rewrite
+    est = flat._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(est) <= SMALL_COMMIT_BYTES
 
 
 def replay_changelog(

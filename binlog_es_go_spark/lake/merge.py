@@ -27,8 +27,9 @@ Physical plan, deliberately:
 
     1. affected buckets and their key hashes come from the caller: a
        BatchKeyInfo per bucket, built by batch_key_info in the same
-       grouped scan that yields the batch's offsets (None = every
-       bucket, unpruned); the merge runs no Spark job before its write
+       grouped scan that yields the batch's offsets, or observed on a
+       declined delta write (observe_batch_keys; None = every bucket,
+       unpruned); the merge runs no Spark job before its write
     2. target read pruned to those buckets' files that may hold a batch
        key (plan_file_cow: file skipping — O(batch), not O(table))
     3. union(target-subset, source) → window by key ordered by (offset
@@ -60,7 +61,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -147,9 +148,11 @@ def batch_key_info(
     and per bucket the batch's key hashes (file-granular COW pruning and
     the small-batch write shape). Metadata jobs are a serial cost per
     commit, so they are folded together: ``apply_batch`` runs this per
-    micro-batch, ``replay_changelog`` once for all its commits (``batch``:
-    a column giving each row's commit index), ``compact_deltas`` for the
-    fold's source.
+    large micro-batch (a provably small one observes the same metadata
+    on its delta write instead, see observe_batch_keys),
+    ``replay_changelog`` once for all its commits (``batch``: a column
+    giving each row's commit index), ``compact_deltas`` for the fold's
+    source.
 
     Grouped by (partition, bucket) — by partition only when the source has
     ``partition_id`` (the fold's does not; its offsets come back empty):
@@ -178,26 +181,68 @@ def batch_key_info(
         .collect()
     )
     offs: dict[int | None, dict[str, int]] = {}
-    acc: dict[tuple[int | None, int], list] = {}  # (batch, bucket) -> [set | None, lo, hi]
+    groups: dict[int | None, list] = {}
     for r in rows:
         i = int(r["_batch"]) if batch is not None else None
         offs_i = offs.setdefault(i, {})
         if has_pid:
             p = str(r["partition_id"])
             offs_i[p] = max(offs_i.get(p, -(1 << 62)), int(r["mx"]))
-        cur = acc.setdefault((i, int(r["_b"])), [set(), int(r["lo"]), int(r["hi"])])
-        cur[1] = min(cur[1], int(r["lo"]))
-        cur[2] = max(cur[2], int(r["hi"]))
-        if cur[0] is not None:
-            cur[0].update(r["khs"])
-            if len(cur[0]) > KEY_PRUNE_CAP:
-                cur[0] = None
-    out = {i: BatchKeys(offsets=o, buckets={}) for i, o in offs.items()}
-    for (i, b), (s, lo, hi) in sorted(acc.items(), key=lambda kv: kv[0][1]):
-        out[i].buckets[b] = BatchKeyInfo(khashes=sorted(s) if s is not None else None, lo=lo, hi=hi)
+        groups.setdefault(i, []).append((int(r["_b"]), r["khs"], int(r["lo"]), int(r["hi"])))
+    out = {i: BatchKeys(offsets=offs[i], buckets=bucket_key_info(g)) for i, g in groups.items()}
     if batch is not None:
         return out
     return out.get(None, BatchKeys(offsets={}, buckets={}))
+
+
+def bucket_key_info(groups) -> dict[int, BatchKeyInfo]:
+    """Per-bucket key info from ``(bucket, hashes, lo, hi)`` groups — the
+    one KEY_PRUNE_CAP rule of batch_key_info and observed_batch_keys: a
+    bucket keeps its exact sorted hash set while the union of its groups
+    fits under the cap, else only the [lo, hi] range of all of them."""
+    acc: dict[int, list] = {}  # bucket -> [set | None, lo, hi]
+    for b, khs, lo, hi in groups:
+        cur = acc.setdefault(b, [set(), lo, hi])
+        cur[1] = min(cur[1], lo)
+        cur[2] = max(cur[2], hi)
+        if cur[0] is not None:
+            cur[0].update(khs)
+            if len(cur[0]) > KEY_PRUNE_CAP:
+                cur[0] = None
+    return {
+        b: BatchKeyInfo(khashes=sorted(s) if s is not None else None, lo=lo, hi=hi)
+        for b, (s, lo, hi) in sorted(acc.items())
+    }
+
+
+def observe_batch_keys(flat: DataFrame, key_cols: list[str]) -> tuple[DataFrame, Observation]:
+    """batch_key_info's metadata as an Observation on whichever job
+    consumes the returned frame — no job of its own. It collects every
+    distinct key hash and every (partition, offset) pair of ``flat`` (all
+    rows: deletes and re-delivered events count), so it is for provably
+    small batches only; read it with observed_batch_keys after the job."""
+    obs = Observation()
+    aggs = [F.collect_set(khash_expr(key_cols)).alias("khs")]
+    if "partition_id" in flat.columns:
+        aggs.append(F.collect_set(F.struct("partition_id", "offset")).alias("offs"))
+    return flat.observe(obs, *aggs), obs
+
+
+def observed_batch_keys(obs: Observation, n_buckets: int) -> BatchKeys:
+    """The BatchKeys of an observe_batch_keys Observation — equal to
+    batch_key_info's on the same rows."""
+    got = obs.get
+    by_bucket: dict[int, list[int]] = {}
+    for h in got.get("khs") or []:
+        by_bucket.setdefault(int(h) % n_buckets, []).append(int(h))
+    offsets: dict[str, int] = {}
+    for pid, off in got.get("offs") or []:
+        p = str(pid)
+        offsets[p] = max(offsets.get(p, -(1 << 62)), int(off))
+    return BatchKeys(
+        offsets=offsets,
+        buckets=bucket_key_info((b, hs, min(hs), max(hs)) for b, hs in by_bucket.items()),
+    )
 
 
 def plan_file_cow(
@@ -353,19 +398,22 @@ def _merge_once(
     # sees every guard row that matters.
     target = table.read(files=overlap_files, include_deleted=True, resolve_deltas=False)
     # Pending merge-on-read deltas can hold a NEWER (offset, seq) for a
-    # batch key than any base file: fold the affected buckets' rows of the
-    # deltas that may hold a batch key (deltas_for: recorded hash sets,
-    # else ranges) into the target side so the guard window sees them.
-    # The delta files stay listed (they span unaffected buckets); their
-    # now-folded rows tie with the rewritten base copies at read time and
-    # base wins ties, so leaving them is correct — compact_deltas
-    # reclaims them.
+    # batch key than any base file: fold the rows of the deltas that may
+    # hold a batch key (deltas_for: recorded hash sets, else ranges) into
+    # the target side so the guard window sees them — only rows whose
+    # stored hash the batch may touch (_batch_hash_filter). A kept row's
+    # hash also puts every base file that may hold its key in the rewrite
+    # set, so no key ends up with a base row in a carried file AND one in
+    # a rewritten file; a dropped row stays pending in its delta. The
+    # delta files stay listed; their folded rows tie with the rewritten
+    # base copies at read time and base wins ties, so leaving them is
+    # correct — compact_deltas reclaims them.
     dfiles = deltas_for(snap, key_info)
     if dfiles:
-        target = target.unionByName(
-            table.delta_rows(version=snap.version, buckets=affected, delta_files=dfiles),
-            allowMissingColumns=True,
-        )
+        drows = table.delta_rows(version=snap.version, buckets=affected, delta_files=dfiles)
+        if key_info is not None:
+            drows = drows.filter(_batch_hash_filter(key_info, snap.n_buckets))
+        target = target.unionByName(drows, allowMissingColumns=True)
     target = align_to_schema(target, new_schema)
     tgt_norm = (
         target.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets))
@@ -484,6 +532,28 @@ def _merge_once(
     )
 
 
+def _batch_hash_filter(key_info: dict[int, BatchKeyInfo], n_buckets: int) -> str:
+    """SQL predicate on the stored _khash: the rows a batch with this key
+    info may touch — the exact hash where the bucket's set is exact, the
+    bucket's [lo, hi] where it is not; NULL hashes (pre-khash files) kept.
+    The exact hashes travel as ONE string literal that the optimizer
+    folds into an array constant: an IN list costs the parser and
+    analyzer ~0.15 ms per hash (~0.5 s for a 3 200-key fold), a Column
+    isin a py4j round trip per hash."""
+    kh = f"`{KHASH_COL}`"
+    exact = [h for i in key_info.values() if i.khashes is not None for h in i.khashes]
+    terms = [f"{kh} IS NULL"]
+    if exact:
+        csv = ",".join(str(h) for h in exact)
+        terms.append(f"array_contains(CAST(split('{csv}', ',') AS array<bigint>), {kh})")
+    terms += [
+        f"(pmod({kh}, {n_buckets}) = {b} AND {kh} BETWEEN {i.lo} AND {i.hi})"
+        for b, i in key_info.items()
+        if i.khashes is None
+    ]
+    return " OR ".join(terms)
+
+
 def _normalize_source(
     src: DataFrame,
     key_cols: list[str],
@@ -523,6 +593,7 @@ def merge_into_delta(
     source: DataFrame,
     properties_fn=None,
     key_info: dict[int, BatchKeyInfo] | None = None,
+    before_link=None,
 ) -> MergeResult:
     """Merge-on-read apply: the O(batch) tail write path.
 
@@ -542,8 +613,15 @@ def merge_into_delta(
     into base files. The apply core auto-picks it for small batches and
     auto-folds past a debt threshold (cdc/apply.py).
 
+    The commit is write -> decide -> link (``LakeTable.append_delta``):
+    the file is written first, ``before_link`` (if given) may then turn
+    it down — append_delta raises DeltaDeclined and the caller rewrites
+    instead — or supply the key info it observed on the write; only the
+    link retries on CommitConflict.
+
     ``key_info``: the batch's per-bucket key info, as ``merge_into`` takes
-    it. It prunes nothing here; when exact and small, its hash set is
+    it (or as ``before_link`` returns it). It prunes nothing here; it
+    names the delta's buckets, and when exact and small its hash set is
     recorded for the delta file (``Snapshot.delta_khashes``) so point
     lookups and later rewrite merges read only the deltas that can hold
     their keys.
@@ -557,20 +635,20 @@ def merge_into_delta(
     # kilobyte-scale file. Delta files carry all batch rows; dedup debt
     # is settled at read/fold time like the rest of the guard.
     winners = _normalize_source(source, snap.key_cols, payload_cols)
-
-    def commit() -> MergeResult:
-        with scoped_merge_conf(table.spark):
-            new_snap = table.append_delta(
-                winners, properties_fn=properties_fn, new_schema=new_schema, key_info=key_info
-            )
-        return MergeResult(
-            version=new_snap.version,
-            affected_buckets=[],
-            rewritten_files=0,
-            carried_files=sum(len(fl) for fl in snap.buckets.values()),
+    with scoped_merge_conf(table.spark):
+        new_snap = table.append_delta(
+            winners,
+            properties_fn=properties_fn,
+            new_schema=new_schema,
+            key_info=key_info,
+            before_link=before_link,
         )
-
-    return retry_on_conflict(commit)
+    return MergeResult(
+        version=new_snap.version,
+        affected_buckets=[],
+        rewritten_files=0,
+        carried_files=sum(len(fl) for fl in new_snap.buckets.values()),
+    )
 
 
 def align_union(a: DataFrame, b: DataFrame, schema: T.StructType) -> DataFrame:

@@ -40,6 +40,7 @@ from __future__ import annotations
 import bisect
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -70,6 +71,11 @@ KEY_PRUNE_CAP = 1024
 
 class CommitConflict(Exception):
     """Another writer committed first; caller should re-read and retry."""
+
+
+class DeltaDeclined(Exception):
+    """append_delta's ``before_link`` turned the written delta down; its
+    directory is removed and the table is unchanged."""
 
 
 COMMIT_ATTEMPTS = 5
@@ -148,7 +154,7 @@ class Snapshot:
     # cdc/apply.py + maintenance.compact_deltas. Absent pre-round-5.
     deltas: list[str] = None  # type: ignore[assignment]
     # delta file -> sorted bucket ids its rows hash into (recorded at
-    # append time via an Observation on the write job — zero extra jobs):
+    # append time from the batch's key info — zero extra jobs):
     # lets snapshot diffs and maintenance scope delta work to O(touched
     # buckets) instead of O(table). Missing entries degrade to "could be
     # any bucket" (conservative).
@@ -216,6 +222,17 @@ def deltas_for(snap: Snapshot, key_info: dict[int, BatchKeyInfo] | None) -> list
         return False
 
     return [rel for rel in rels if hit(rel)]
+
+
+@dataclass
+class _StagedDelta:
+    """A written, not yet linked delta commit directory (append_delta)."""
+
+    rel_dir: str
+    schema: T.StructType       # the schema its file was written under
+    planned_on: T.StructType   # the table schema when it was written
+    sizes: dict[str, int]      # relative file path -> bytes
+    stats: dict[str, dict]     # relative file path -> footer stats
 
 
 class LakeTable:
@@ -336,7 +353,9 @@ class LakeTable:
         path = os.path.join(self.root, f"manifest-{snap.version}.json")
         tmp = path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(m, f)
+            # one C-encoded string: json.dump streams through the pure-
+            # Python iterencode, thousands of small writes per manifest
+            f.write(json.dumps(m))
             f.flush()
             os.fsync(f.fileno())
         # EXCLUSIVE create: the manifest filename is the real commit lock.
@@ -491,21 +510,35 @@ class LakeTable:
     def append_delta(
         self,
         df: DataFrame,
-        properties_update: dict[str, Any] | None = None,
-        expected_version: int | None = None,
         properties_fn=None,
         new_schema: T.StructType | None = None,
         key_info: dict[int, BatchKeyInfo] | None = None,
+        before_link=None,
     ) -> Snapshot:
         """Merge-on-read commit: append ``df`` (already normalized to the
         engine row shape — payload + last_offset/last_seq/last_op/_deleted/
         updated_at) as ONE small delta file, touching no base file.
 
+        Two steps: WRITE the file into a fresh commit directory (the one
+        Spark job), then LINK it into a new manifest. Only the link is
+        retried on CommitConflict: it re-reads the snapshot and re-merges
+        the properties through ``properties_fn``, and keeps the written
+        file unless the winning commit changed the table schema (then the
+        file is written again under the widened schema).
+
+        ``before_link``: called once between the two steps; it returns the
+        key info to link with (for a caller that learns it from an
+        Observation on the write job) or None to turn the delta down — the
+        written directory is removed and DeltaDeclined raised, leaving the
+        table untouched.
+
         ``key_info``: the batch's per-bucket key info, covering every key
-        of ``df``. When every bucket's set is exact and together they hold
-        at most KEY_PRUNE_CAP hashes, the union is recorded as the delta's
+        of ``df``. Its buckets become the delta's ``delta_buckets`` entry;
+        when every bucket's set is exact and together they hold at most
+        KEY_PRUNE_CAP hashes, the union is recorded as its
         ``delta_khashes`` entry, so lookups skip deltas that lack their
-        keys; otherwise the delta is pruned by its _khash range.
+        keys; otherwise the delta is pruned by its _khash range. Without
+        key info neither entry is recorded (read as "any bucket").
 
         The write is O(batch): no target read, no guard window, no
         rewrite. The (offset, seq) guard DEFERS to read time — readers
@@ -516,51 +549,63 @@ class LakeTable:
         identical rows that lose/tie the same resolution — idempotent in
         effect, and folded away by compact_deltas.
         """
-        base = self.snapshot(expected_version)
-        schema = new_schema or base.schema
-        commit_id = uuid.uuid4().hex
-        rel_dir = os.path.join("data", commit_id)
-        out_dir = os.path.join(self.root, rel_dir)
+        base = self.snapshot()
+        staged = self._write_delta(df, base, new_schema or base.schema)
+        if before_link is not None:
+            key_info = before_link()
+            if key_info is None:
+                shutil.rmtree(os.path.join(self.root, staged.rel_dir), ignore_errors=True)
+                raise DeltaDeclined(staged.rel_dir)
 
+        def link() -> Snapshot:
+            nonlocal base, staged
+            if self.current_version() != base.version:
+                base = self.snapshot()
+                if base.schema != staged.planned_on:
+                    shutil.rmtree(os.path.join(self.root, staged.rel_dir), ignore_errors=True)
+                    staged = self._write_delta(df, base, merge_schemas(base.schema, staged.schema))
+            return self._link_delta(base, staged, properties_fn, key_info)
+
+        return retry_on_conflict(link)
+
+    def _write_delta(self, df: DataFrame, base: Snapshot, schema: T.StructType) -> "_StagedDelta":
+        """The write step of append_delta: ``df`` as one khash-sorted file
+        in a new commit directory, with its size and footer stats."""
+        rel_dir = os.path.join("data", uuid.uuid4().hex)
+        out_dir = os.path.join(self.root, rel_dir)
         out = df.withColumn(KHASH_COL, khash_expr(base.key_cols))
         out = align_to_schema(out, schema).select(*[f.name for f in schema.fields])
         # ONE file, khash-sorted: point lookups prune deltas by the same
         # footer range machinery as base files; a 200-event batch is a
         # single ~10 KB parquet object however many buckets it spans.
-        # The touched-bucket set rides the write job as an Observation
-        # (zero extra jobs) into the manifest's delta_buckets map.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        out = out.observe(
-            obs, F.collect_set(F.pmod(F.col(KHASH_COL), F.lit(base.n_buckets)).cast("int")).alias("bks")
-        )
         out.coalesce(1).sortWithinPartitions(KHASH_COL).write.parquet(out_dir, mode="errorifexists")
-        touched = sorted(int(b) for b in (obs.get.get("bks") or []))
+        sizes = {}
+        for dirpath, _, fns in os.walk(out_dir):
+            for fn in fns:
+                if fn.endswith(".parquet"):
+                    full = os.path.join(dirpath, fn)
+                    sizes[os.path.relpath(full, self.root)] = os.path.getsize(full)
+        return _StagedDelta(
+            rel_dir=rel_dir,
+            schema=schema,
+            planned_on=base.schema,
+            sizes=sizes,
+            stats=_harvest_file_stats(self.root, list(sizes), schema),
+        )
+
+    def _link_delta(
+        self, base: Snapshot, staged: "_StagedDelta", properties_fn, key_info
+    ) -> Snapshot:
+        """The link step of append_delta: one manifest on top of ``base``
+        listing the staged file as a pending delta."""
+        rels = sorted(staged.sizes)
+        touched = sorted(key_info) if key_info is not None else None
         khashes = None
         if key_info and all(i.khashes is not None for i in key_info.values()):
             khashes = sorted({h for i in key_info.values() for h in i.khashes})
             if len(khashes) > KEY_PRUNE_CAP:
                 khashes = None
-
-        rels, sizes = [], {}
-        for dirpath, _, fns in os.walk(out_dir):
-            for fn in fns:
-                if fn.endswith(".parquet"):
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.relpath(full, self.root)
-                    rels.append(rel)
-                    try:
-                        sizes[rel] = os.path.getsize(full)
-                    except OSError:
-                        pass
-        file_stats = dict(base.file_stats or {})
-        file_stats.update(_harvest_file_stats(self.root, rels, schema))
-        file_sizes = dict(base.file_sizes or {})
-        file_sizes.update(sizes)
-
         props = dict(base.properties)
-        props.update(properties_update or {})
         if properties_fn is not None:
             props.update(properties_fn(dict(base.properties)) or {})
         snap = Snapshot(
@@ -568,14 +613,17 @@ class LakeTable:
             parent=base.version,
             key_cols=base.key_cols,
             n_buckets=base.n_buckets,
-            schema=schema,
+            schema=staged.schema,
             buckets=dict(base.buckets),
             properties=props,
             stats={"rows": None, "committed_at": time.time()},
-            file_stats=file_stats,
-            file_sizes=file_sizes,
-            deltas=list(base.deltas or []) + sorted(rels),
-            delta_buckets={**(base.delta_buckets or {}), **{r: touched for r in rels}},
+            file_stats={**(base.file_stats or {}), **staged.stats},
+            file_sizes={**(base.file_sizes or {}), **staged.sizes},
+            deltas=list(base.deltas or []) + rels,
+            delta_buckets={
+                **(base.delta_buckets or {}),
+                **({r: touched for r in rels} if touched is not None else {}),
+            },
             delta_khashes={
                 **(base.delta_khashes or {}),
                 **({r: khashes for r in rels} if khashes is not None else {}),

@@ -446,3 +446,38 @@ def test_rewrite_reads_only_deltas_meeting_the_batch(spark, tmp_path, monkeypatc
     assert got == oracle
     keys = [by_bucket[b][j] for b in range(n) for j in (0, 1, 9)]
     assert _lookup(t, keys) == {k: oracle[k] for k in keys if k in oracle}
+
+
+def test_rewrite_folds_only_batch_keys_of_a_delta(spark, tmp_path):
+    """A rewrite commit folds only the batch's keys out of a pending
+    delta: a delta updating K and J, then a rewrite of J alone, leaves K's
+    base row in its carried file and K's update pending in the delta — a
+    raw base scan holds K once (not also as a folded copy in J's
+    rewritten file), and reads still see K's update."""
+    t = fresh(spark, tmp_path, n_buckets=1)
+    keys = [(f"r{i}", "f.py") for i in range(40)]
+    quarter = 1 << 30
+    k = next(key for key in keys if _khash(key) < quarter)
+    j = next(key for key in keys if _khash(key) >= 3 * quarter)
+    events = [_ev(o, "insert", *key, "v0") for o, key in enumerate(keys)]
+    apply_batch(t, spark.createDataFrame(events, EVENT_SCHEMA), batch_id=0)
+    compact(t, target_files_per_bucket=4)
+    assert len(t.snapshot().buckets[0]) == 4
+
+    batch = [_ev(100, "update", *k, "k1"), _ev(101, "update", *j, "j1")]
+    events += batch
+    apply_batch(t, spark.createDataFrame(batch, EVENT_SCHEMA), batch_id=1, write_mode="delta")
+    batch = [_ev(200, "update", *j, "j2")]
+    events += batch
+    res = apply_batch(t, spark.createDataFrame(batch, EVENT_SCHEMA), batch_id=2,
+                      write_mode="rewrite")
+    assert res.rewritten_files == 1 and res.carried_files == 3
+
+    snap = t.snapshot()
+    base = t.read(files=snap.buckets[0], include_deleted=True, resolve_deltas=False)
+    rows = base.filter((F.col("repo") == k[0]) & (F.col("path") == k[1])).collect()
+    assert [r["content"] for r in rows] == ["v0"]
+    oracle = _oracle_rows(events)
+    assert _lookup(t, [k, j]) == {k: "k1", j: "j2"} == {x: oracle[x] for x in (k, j)}
+    got = {(r["repo"], r["path"]): r["content"] for r in t.read().collect()}
+    assert got == oracle
