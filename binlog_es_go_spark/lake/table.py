@@ -837,18 +837,26 @@ class LakeTable:
         Spark casts them (exact for string and integer key columns — the
         supported key types).
 
-        The scanned rows are resolved in ONE guard window over the key
-        columns — the (offset, seq) order of a logical read, base winning
-        full ties — after a ``_khash`` filter has cut them to the wanted
-        hashes, so the window sees a handful of rows. The final filter on
-        the joined key drops crc32 collisions.
+        Base files and deltas are read in ONE scan and cut by ONE
+        predicate: the wanted ``_khash`` values (pushed to the parquet
+        reader, so row groups and pages of large khash-sorted files are
+        skipped) and the joined key (drops crc32 collisions). When a
+        pending delta may hold a wanted key, each row is tagged base or
+        delta by its file (``_metadata.file_path`` against the delta
+        list) and the rows are resolved in one guard window
+        (latest_per_key: the order of a logical read, base winning full
+        ties) over a single partition, so the lookup runs as one Spark
+        job of one stage and one task, with no shuffle. That task reads
+        every pruned file, which suits a handful of keys; a bulk key set
+        belongs to ``read()`` plus a filter or join.
+
+        Key values reach the plan only through ``sql_str``, never as raw
+        SQL text.
         """
         import zlib
 
         snap = self.snapshot(version)
-        if not keys:
-            return self.read(files=[], version=snap.version)
-        joined_keys: list[str] = []
+        joined_keys: dict[str, None] = {}
         by_bucket: dict[int, set[int]] = {}
         for kt in keys:
             vals = kt if isinstance(kt, (tuple, list)) else (kt,)
@@ -856,7 +864,7 @@ class LakeTable:
                 raise ValueError(f"key {kt!r} arity != key_cols {snap.key_cols}")
             joined = KEY_SEP.join("" if v is None else str(v) for v in vals)
             kh = zlib.crc32(joined.encode("utf-8"))
-            joined_keys.append(joined)
+            joined_keys[joined] = None
             by_bucket.setdefault(kh % snap.n_buckets, set()).add(kh)
         key_info = {
             b: BatchKeyInfo(khashes=sorted(hs), lo=min(hs), hi=max(hs))
@@ -869,55 +877,70 @@ class LakeTable:
             for rel in snap.buckets.get(b, [])
             if file_may_hold(snap, rel, info)
         ]
-        df = self.read(files=files, include_deleted=True, version=snap.version,
-                       resolve_deltas=False)
         # Pending deltas can hold a newer version of a looked-up key (or
-        # its tombstone): union the deltas that may hold one and keep the
-        # guard winner per key.
+        # its tombstone): they join the scan, and the guard picks the winner.
         dfiles = deltas_for(snap, key_info)
-        if dfiles:
-            delta = self.delta_rows(version=snap.version, delta_files=dfiles)
-            df = df.withColumn("_is_base", F.lit(1)).unionByName(
-                delta.withColumn("_is_base", F.lit(0))
-            )
-        hashes = sorted({h for hs in by_bucket.values() for h in hs})
-        # pre-khash files carry a NULL _khash: kept, the key filter decides
-        df = df.filter(F.col(KHASH_COL).isNull() | F.col(KHASH_COL).isin(hashes))
-        if dfiles:
-            df = latest_per_key(df, snap.key_cols)
-        if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        joined_expr = F.concat_ws(
-            KEY_SEP,
-            *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in snap.key_cols],
+        if not files and not dfiles:
+            return self.read(files=[], version=snap.version)
+        df = self.read(files=files + dfiles, include_deleted=True, version=snap.version,
+                       resolve_deltas=False)
+        kh = f"`{KHASH_COL}`"
+        hashes = ", ".join(str(h) for hs in by_bucket.values() for h in sorted(hs))
+        joined_sql = "concat_ws({}, {})".format(
+            sql_str(KEY_SEP),
+            ", ".join(f"coalesce(CAST(`{c}` AS string), '')" for c in snap.key_cols),
         )
-        return df.filter(joined_expr.isin(joined_keys))
+        # pre-khash files carry a NULL _khash: kept, the key filter decides
+        df = df.filter(
+            f"({kh} IS NULL OR {kh} IN ({hashes})) AND "
+            f"{joined_sql} IN ({', '.join(sql_str(k) for k in joined_keys)})"
+        )
+        if dfiles:
+            # manifest paths are relative and URI-safe; the scan reports
+            # each row's file as an absolute URI ending in that path
+            in_delta = " OR ".join(
+                f"endswith(_metadata.file_path, {sql_str('/' + rel)})" for rel in dfiles
+            )
+            # one partition already satisfies the window's per-key
+            # clustering: no Exchange, no AQE map stage
+            df = latest_per_key(
+                df.selectExpr("*", f"NOT ({in_delta}) AS _is_base").coalesce(1), snap.key_cols
+            )
+        if not include_deleted:
+            df = df.filter(f"NOT coalesce(`{DELETED_COL}`, false)")
+        return df
+
+
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string expression that holds exactly it,
+    whatever characters it has: the UTF-8 bytes travel as a hex binary
+    literal, so no quote, backslash or newline reaches the parser as SQL
+    under any string-escaping setting, and the optimizer folds the
+    expression back into one string constant."""
+    return f"decode(X'{value.encode('utf-8').hex()}', 'UTF-8')"
 
 
 def latest_per_key(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Rank 1 per key of base (``_is_base`` = 1) and delta (0) rows by the
-    (offset, seq) guard — the read side of the write-side window in
-    merge.py, same ordering, base winning full ties (a folded-then-
-    lingering delta row is byte-identical to its base copy, so the
-    tie-break only picks which identical row survives)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("last_offset").desc_nulls_last(),
-        F.coalesce(F.col("last_seq"), F.lit(0)).desc(),
-        F.col("_is_base").desc(),
+    """Rank 1 per key of base (``_is_base`` true) and delta (false) rows
+    by the (offset, seq) guard — the read side of the
+    write-side window in merge.py, same ordering, base winning full ties
+    (a folded-then-lingering delta row is byte-identical to its base copy,
+    so the tie-break only picks which identical row survives). The one
+    definition of the read-side guard order, shared by ``read_keys`` and
+    ``resolve_merge_on_read``."""
+    keys = ", ".join(f"`{c}`" for c in key_cols)
+    rank = (
+        f"row_number() OVER (PARTITION BY {keys} ORDER BY last_offset DESC NULLS LAST, "
+        "coalesce(last_seq, 0) DESC, _is_base DESC)"
     )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_is_base")
-    )
+    return df.selectExpr("*", f"{rank} AS _rn").filter("_rn = 1").drop("_rn", "_is_base")
 
 
 def resolve_merge_on_read(base: DataFrame, delta: DataFrame, key_cols: list[str]) -> DataFrame:
     """Fold pending delta rows into a base scan by the (offset, seq)
-    guard (see latest_per_key). Serves full and bucket-pruned scans only:
-    point lookups resolve their few rows in one window (read_keys).
+    guard (latest_per_key). Serves ``read()``'s full and bucket-pruned
+    scans; point lookups scan base and delta files together and resolve
+    their few rows in one window of their own (read_keys).
 
     Scale shape: base rows whose key has NO delta pass through untouched
     via a broadcast LEFT ANTI against the (small, fold-policy-bounded)
@@ -928,8 +951,8 @@ def resolve_merge_on_read(base: DataFrame, delta: DataFrame, key_cols: list[str]
     dkeys = delta.select(*key_cols).distinct()
     untouched = base.join(F.broadcast(dkeys), on=key_cols, how="left_anti")
     touched = base.join(F.broadcast(dkeys), on=key_cols, how="left_semi")
-    combined = touched.withColumn("_is_base", F.lit(1)).unionByName(
-        delta.withColumn("_is_base", F.lit(0))
+    combined = touched.withColumn("_is_base", F.lit(True)).unionByName(
+        delta.withColumn("_is_base", F.lit(False))
     )
     return untouched.unionByName(latest_per_key(combined, key_cols))
 

@@ -481,3 +481,145 @@ def test_rewrite_folds_only_batch_keys_of_a_delta(spark, tmp_path):
     assert _lookup(t, [k, j]) == {k: "k1", j: "j2"} == {x: oracle[x] for x in (k, j)}
     got = {(r["repo"], r["path"]): r["content"] for r in t.read().collect()}
     assert got == oracle
+
+
+# Key values that SQL text could mis-read: quotes, backslashes, a newline,
+# LIKE wildcards, non-ASCII text, an empty component.
+ODD_KEYS = [
+    ("it's", "a.py"),
+    ("back\\slash", "b\\.py"),
+    ("new\nline", "c.py"),
+    ("100%", "d_%.py"),
+    ("ünïcødé ✓", "日本語.py"),
+    ("", "empty.py"),
+    ("x", ""),
+    ("a'); DROP TABLE t; --", "e.py"),
+]
+
+
+def _rows_of(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
+
+
+def _read_filtered(table, keys, key_cols, cols):
+    """``read()`` filtered to ``keys`` in Python: what read_keys must return."""
+    want = {tuple(k) for k in keys}
+    return sorted(
+        tuple(r[c] for c in cols)
+        for r in table.read().collect()
+        if tuple(r[c] for c in key_cols) in want
+    )
+
+
+def test_read_keys_takes_any_key_value(spark, tmp_path):
+    """Keys holding SQL metacharacters, and integer keys, return exactly
+    the rows of read() filtered to them, with and without pending deltas."""
+    cols = ["repo", "path", "content", "last_offset"]
+    t = fresh(spark, tmp_path, n_buckets=4)
+    others = [(f"r{i}", "f.py") for i in range(20)]
+    events = [_ev(o, "insert", *k, f"v{o}") for o, k in enumerate(ODD_KEYS + others)]
+    apply_batch(t, spark.createDataFrame(events, EVENT_SCHEMA), batch_id=0)
+    lookup = ODD_KEYS + others[:2]
+    want = _read_filtered(t, lookup, ["repo", "path"], cols)
+    assert len(want) == len(lookup)
+    assert _rows_of(t.read_keys(lookup), cols) == want
+
+    batch = [_ev(100 + i, "update", *k, f"d{i}") for i, k in enumerate(ODD_KEYS[::2])]
+    batch.append(_ev(200, "delete", *ODD_KEYS[1], None))
+    apply_batch(t, spark.createDataFrame(batch, EVENT_SCHEMA), batch_id=1, write_mode="delta")
+    assert t.snapshot().deltas
+    want = _read_filtered(t, lookup, ["repo", "path"], cols)
+    assert len(want) == len(lookup) - 1
+    assert _rows_of(t.read_keys(lookup), cols) == want
+    for k in ODD_KEYS[:3]:
+        assert _rows_of(t.read_keys([k]), cols) == _read_filtered(t, [k], ["repo", "path"], cols)
+
+    # integer keys, as a rebucketed id table has them
+    payload = T.StructType([T.StructField("id", T.LongType()), T.StructField("val", T.StringType())])
+    events_schema = ("offset long, partition_id int, seq_in_tx int, op string, id long, "
+                     "before struct<val:string>, after struct<val:string>, ts timestamp")
+    ids = LakeTable.create(spark, str(tmp_path / "ids"), payload, key_cols=["id"], n_buckets=4)
+
+    def id_events(rows):
+        return spark.createDataFrame(
+            [(o, 0, 0, op, k, None, None if op == "delete" else (v,), None) for o, op, k, v in rows],
+            events_schema,
+        )
+
+    id_keys = [-3, 0, 7, 2**40]
+    apply_batch(ids, id_events([(o, "insert", k, f"v{k}") for o, k in enumerate(id_keys + [1, 2])]),
+                batch_id=0)
+    icols = ["id", "val", "last_offset"]
+    lookup = [(k,) for k in id_keys] + [(99,)]
+    assert _rows_of(ids.read_keys(lookup), icols) == _read_filtered(ids, lookup, ["id"], icols)
+    apply_batch(ids, id_events([(50, "update", 7, "w7"), (51, "delete", -3, None)]), batch_id=1,
+                write_mode="delta")
+    assert ids.snapshot().deltas
+    got = _rows_of(ids.read_keys(lookup), icols)
+    assert got == _read_filtered(ids, lookup, ["id"], icols)
+    assert [r[:2] for r in got] == [(0, "v0"), (7, "w7"), (2**40, f"v{2**40}")]
+
+
+def test_read_keys_full_tie_goes_to_base(spark, tmp_path):
+    """A base row and a delta row with the same (offset, seq) but different
+    payloads: the base row wins, in a lookup as in a full read — the rows'
+    base/delta tag decides, so an inverted tag fails here."""
+    t = fresh(spark, tmp_path, n_buckets=4)
+    k = ("r1", "a.py")
+    apply_batch(t, spark.createDataFrame([_ev(5, "insert", *k, "base")], EVENT_SCHEMA),
+                batch_id=0)
+    apply_batch(t, spark.createDataFrame([_ev(5, "insert", *k, "delta")], EVENT_SCHEMA),
+                batch_id=1, write_mode="delta")
+    snap = t.snapshot()
+    assert len(snap.deltas) == 1 and snap.buckets
+    raw = t.read(files=snap.deltas, include_deleted=True, resolve_deltas=False).collect()
+    assert [(r["content"], r["last_offset"], r["last_seq"]) for r in raw] == [("delta", 5, 0)]
+    assert _lookup(t, [k]) == {k: "base"}
+    assert {(r["repo"], r["path"]): r["content"] for r in t.read().collect()} == {k: "base"}
+
+
+def test_read_keys_scan_set_shapes(spark, tmp_path, monkeypatch):
+    """Each shape of a lookup's scan set: a key held only by a delta scans
+    no base file; a key no pending delta holds scans no delta and needs no
+    window; a delta tombstone hides the row unless ``include_deleted``;
+    no keys scan nothing."""
+    n = 4
+    by_bucket: dict[int, list[tuple]] = {}
+    for i in range(200):
+        key = (f"r{i}", "f.py")
+        by_bucket.setdefault(_khash(key) % n, []).append(key)
+    t = fresh(spark, tmp_path, n_buckets=n)
+    events = [_ev(o, "insert", *k, "v0") for o, k in enumerate(
+        k for b in range(n - 1) for k in by_bucket[b][:6])]
+    apply_batch(t, spark.createDataFrame(events, EVENT_SCHEMA), batch_id=0)
+    assert n - 1 not in t.snapshot().buckets
+    only_delta, tombstoned, untouched = by_bucket[n - 1][0], by_bucket[0][0], by_bucket[1][0]
+    batch = [_ev(100, "insert", *only_delta, "d1"), _ev(101, "delete", *tombstoned, None)]
+    apply_batch(t, spark.createDataFrame(batch, EVENT_SCHEMA), batch_id=1, write_mode="delta")
+    snap = t.snapshot()
+    assert len(snap.deltas) == 1 and set(snap.delta_khashes) == set(snap.deltas)
+
+    scans = []
+    orig = LakeTable.read
+
+    def spy(self, *args, **kwargs):
+        scans.append(kwargs.get("files"))
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "read", spy)
+    assert _lookup(t, [only_delta]) == {only_delta: "d1"}
+    assert scans.pop() == snap.deltas
+
+    df = t.read_keys([untouched])
+    assert scans.pop() == snap.buckets[1]
+    assert "Window" not in df._jdf.queryExecution().executedPlan().toString()
+    assert [r["content"] for r in df.collect()] == ["v0"]
+
+    assert _lookup(t, [tombstoned]) == {}
+    rows = t.read_keys([tombstoned], include_deleted=True).collect()
+    assert [(r["last_offset"], r["last_op"], r["_deleted"]) for r in rows] == [(101, "delete", True)]
+
+    for include_deleted in (False, True):
+        df = t.read_keys([], include_deleted=include_deleted)
+        assert scans.pop() == []
+        assert df.columns == orig(t).columns and df.count() == 0

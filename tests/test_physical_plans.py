@@ -227,5 +227,32 @@ def test_read_keys_resolves_deltas_in_one_window(spark, tmp_path):
     df = t.read_keys([("r1", "a.py"), ("r7", "a.py")])
     plan = plan_of(df)
     assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan, plan[:1500]
+    # base files and deltas in ONE scan, one partition: no shuffle at all
+    assert "Exchange" not in plan, plan[:1500]
+    assert len(re.findall(r"FileScan parquet", plan)) == 1, plan[:1500]
+    pushed = plan.split("PushedFilters: [", 1)[1].split(", ReadSchema:", 1)[0]
+    assert "In(_khash," in pushed, pushed
     assert len(re.findall(r"\bWindow \[", plan)) == 1, plan[:1500]
     assert sorted((r["repo"], r["content"]) for r in df.collect()) == [("r1", "v1"), ("r7", "v0")]
+
+
+def test_read_keys_with_pending_delta_runs_one_job(spark, tmp_path):
+    """A point lookup whose keys have a pending delta is one Spark job:
+    no AQE map stage ahead of the guard window (counted by job group)."""
+    from test_observed_keys import PAYLOAD, _events, _jobs_in_group
+
+    from binlog_es_go_spark.cdc.apply import apply_batch
+    from binlog_es_go_spark.lake.table import LakeTable
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), PAYLOAD, ["repo", "path"], n_buckets=4)
+    base = [(i, 0, "insert", f"r{i}", "a.py", "v0") for i in range(40)]
+    apply_batch(t, _events(spark, tmp_path, "base", base), batch_id=0)
+    update = [(100 + i, 0, "update", f"r{i}", "a.py", "v1") for i in range(5)]
+    apply_batch(t, _events(spark, tmp_path, "update", update), batch_id=1, write_mode="delta")
+    assert t.snapshot().deltas
+    rows, jobs = _jobs_in_group(
+        spark, "lookup",
+        lambda: t.read_keys([("r1", "a.py"), ("r30", "a.py")]).select("repo", "content").collect(),
+    )
+    assert sorted(tuple(r) for r in rows) == [("r1", "v1"), ("r30", "v0")]
+    assert jobs == 1
